@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: one JSON line with total + per-query seconds.
   *
@@ -204,7 +205,7 @@ object Bench {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         queryErrors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
           .linesIterator.take(1).mkString.take(200)
@@ -275,7 +276,7 @@ object Bench {
     // disagreed 4x — a high loadavg in the artifact explains a slow run)
     val loadavg = try {
       scala.io.Source.fromFile("/proc/loadavg").getLines().next().split(" ")(0)
-    } catch { case _: Throwable => "-1" }
+    } catch { case NonFatal(_) => "-1" }
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""
@@ -326,7 +327,7 @@ object Bench {
           java.nio.file.Files.move(tmp, dst,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] failed to write $out: $e")
       }
     }

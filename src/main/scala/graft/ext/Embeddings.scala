@@ -137,34 +137,46 @@ object Embeddings {
   private[graft] def armTag(n: Long): String =
     if (!useTrainedArm(n)) "" else s"_k${coarseK(n)}r${CoarseRounds}q$PqCodebookSize"
 
-  /** Nearest-codeword assignment by squared distance, (d2, cl) ties —
-    * ONE [[graft.functions.NearestCodewords]] kernel column (no n·k join,
-    * no shuffle, no unrolled literal terms). The codebook MUST be
-    * cl-ascending: the kernel's first-min index tie-break then equals the
-    * oracle's (d2, cl). Appends `cl` to the input frame. */
-  private[graft] def assignNearest(e: DataFrame,
-      cb: Array[(Any, Array[Float])]): DataFrame = {
-    val cls = cb.map(_._1.asInstanceOf[Number].longValue).toSeq
-    val idx = graft.functions.ArrayOps.nearestCodewords(
-      col("embedding"), cb.map(_._2), 1)
-    e.withColumn("cl", element_at(typedlit(cls), element_at(idx, 1) + 1))
+  /** Codeword ids of a 0-based kernel index column, through a small
+    * literal array that keeps the codebook key's NATIVE type — int32
+    * labels on the label arm (so e8's egress schema is the label's),
+    * long ids on the trained arm. */
+  private def idAt(cb: Array[(Any, Array[Float])], i: Column): Column = {
+    val ids = cb.head._1 match {
+      case _: java.lang.Integer => typedlit(cb.map(_._1.asInstanceOf[Int]).toSeq)
+      case _ => typedlit(cb.map(_._1.asInstanceOf[Number].longValue).toSeq)
+    }
+    element_at(ids, i + 1)
   }
 
-  /** Trained-arm corpus pass — the [[pqPass]] twin over corpus-sized
-    * codebooks: ONE projection of two [[graft.functions.NearestCodewords]]
-    * kernels emits (vec_id, coarse cluster, PQ code array); kernel indices
-    * map to codeword ids through small literal arrays. */
-  private[graft] def trainedCodesPass(e: DataFrame, ccb: Array[(Any, Array[Float])],
-      pcb: Array[(Any, Array[Float])]): DataFrame = {
-    val ccls = ccb.map(_._1.asInstanceOf[Number].longValue).toSeq
-    val pcls = pcb.map(_._1.asInstanceOf[Number].longValue).toSeq
-    val coarseIdx = graft.functions.ArrayOps.nearestCodewords(
-      col("embedding"), ccb.map(_._2), 1)
-    val pqIdx = graft.functions.ArrayOps.nearestCodewords(
-      col("embedding"), pcb.map(_._2), PqM)
-    e.select(col("vec_id"),
-      element_at(typedlit(ccls), element_at(coarseIdx, 1) + 1).as("cl"),
-      transform(pqIdx, i => element_at(typedlit(pcls), i + 1)).as("codes"))
+  /** Whole-vector nearest codeword id of `embedding` — (d2, cl) ties, or
+    * with `cosine` the label arm's (cos DESC, cl) convention (NULL when
+    * every cosine is NULL). The codebook MUST be cl-ascending: the
+    * kernel's first-extremum index tie-break then equals the oracle's. */
+  private def nearestCell(cb: Array[(Any, Array[Float])], cosine: Boolean): Column =
+    idAt(cb, element_at(graft.functions.ArrayOps.nearestCodewords(
+      col("embedding"), cb.map(_._2), 1, cosine), 1))
+
+  /** THE corpus coding pass — every PQ/IVF codeword assignment the
+    * engine makes, on both codebook arms: ONE projection of
+    * [[graft.functions.NearestCodewords]] kernel columns (no n·k join, no
+    * shuffle, no unrolled literal terms) emitting (vec_id, [cl,] codes).
+    * `codes` holds the M per-subspace PQ codeword ids of `pcb`; with
+    * `withErr` each element is a struct (code, err2) carrying the
+    * attained squared error (e8). With a `coarse` codebook `cl` is the
+    * IVF cell — cosine argmax on the label arm (`cosine`), d2 argmin on
+    * the trained arm. Codebooks MUST be cl-ascending. */
+  private[graft] def codesPass(e: DataFrame, pcb: Array[(Any, Array[Float])],
+      coarse: Option[Array[(Any, Array[Float])]] = None,
+      cosine: Boolean = false, withErr: Boolean = false): DataFrame = {
+    val pq = graft.functions.ArrayOps.nearestCodewords(
+      col("embedding"), pcb.map(_._2), PqM, withScore = withErr)
+    val codes =
+      if (withErr) transform(pq, x =>
+        struct(idAt(pcb, x("idx")).as("code"), x("score").as("err2")))
+      else transform(pq, i => idAt(pcb, i))
+    val cl = coarse.map(ccb => nearestCell(ccb, cosine).as("cl"))
+    e.select(col("vec_id") +: cl.toSeq :+ codes.as("codes"): _*)
   }
 
   /** Lloyd-trained coarse codebook: seed = the first-k vectors (the
@@ -194,8 +206,8 @@ object Embeddings {
     var i = 0
     var converged = false
     while (i < rounds && !converged) {
-      val stats = kmStats(assignNearest(
-          e.select(col("vec_id"), col("embedding")), cb), "cl")
+      val stats = kmStats(e.select(col("vec_id"), col("embedding"),
+          nearestCell(cb, cosine = false).as("cl")), "cl")
         .collect()
         .map(r => (r.get(0).asInstanceOf[Number].longValue, r.getLong(1),
           r.getLong(2), r.getDouble(3)))
@@ -218,7 +230,7 @@ object Embeddings {
     } else (trainCoarse(e, coarseK(n)), pqSampleCodebook(e), true)
 
   /** The trained arm's PQ codebook: the first [[PqCodebookSize]] vectors,
-    * keyed by vec_id — [[subDists]] slices each per subspace, so every
+    * keyed by vec_id — [[codesPass]] slices each per subspace, so every
     * subspace gets its own 256-entry codebook drawn from the data
     * distribution. */
   private def pqSampleCodebook(e: DataFrame): Array[(Any, Array[Float])] =
@@ -387,11 +399,11 @@ object Embeddings {
   }
 
   /** The deterministic per-label codebook (min-vec_id representative),
-    * collected to the driver so e8/e10 can unroll the per-subspace
-    * argmin into a single codegen'd projection. O(#labels · Dims)
-    * floats — the PQ codebook is driver/broadcast state by design (it
-    * is what gets trained); the guard keeps an unexpected label
-    * explosion from turning the unrolled expression quadratic.
+    * collected to the driver so the label-arm [[codesPass]] can hand it
+    * to the NearestCodewords kernel as one referenced object.
+    * O(#labels · Dims) floats — the PQ codebook is driver/broadcast
+    * state by design (it is what gets trained); the guard keeps an
+    * unexpected label explosion from becoming driver state.
     */
   private[graft] def codebook(e: DataFrame): Array[(Any, Array[Float])] = {
     val cb = e.withColumn("rn",
@@ -401,13 +413,12 @@ object Embeddings {
       .orderBy("cl")
       .collect()
       // label keeps its NATIVE type (int32 in the parquet schema) so the
-      // unrolled literals reproduce the exact egress schema the
+      // id literals (see idAt) reproduce the exact egress schema the
       // DataFrame codebook produced
       .map(r => (r.get(0), r.getSeq[Float](1).toArray))
-    // Past ArgminShardSize codewords the unrolled argmin SHARDS across
-    // projection layers (see [[pqPass]]) instead of failing — janino's
-    // 64 KB method budget is per generated method, and the shard columns
-    // land in separate methods. What remains guarded is the driver
+    // The kernel has no per-method bytecode budget to outgrow (the
+    // codebook is one referenced array, not unrolled terms), so codebook
+    // size only costs k·d work per row. What is guarded is the driver
     // collect itself: real PQ codebooks are <= 256 codewords per
     // subspace by construction (one byte per code), so a six-figure
     // "codebook" means the label column isn't a trained codebook and
@@ -418,16 +429,6 @@ object Embeddings {
         "with fewer centroids — PQ uses <= 256 per subspace.")
     cb
   }
-
-  /** Codewords per unrolled-argmin shard. One codegen'd distance term is
-    * emitted per codeword; past ~1024 in ONE method janino's 64 KB
-    * bytecode budget blows and WSCG silently falls back to interpreted
-    * eval (measured at sf10 — commit 435edbc). [[pqPass]] keeps each
-    * shard's argmin in its own projection column (its own generated
-    * method) and reduces shards with least() + first-match, so any
-    * codebook size up to the [[codebook]] driver bound stays codegen'd.
-    */
-  val ArgminShardSize = 1024
 
   /** Query-batch ceiling for the BROADCAST LUT side of e10/e11 (round-7
     * verdict task 6 — the honesty note e4's geometry ladder carries).
@@ -463,113 +464,6 @@ object Embeddings {
         s"(ceiling ${adcMaxQueryBatch(codebookSize, nprobe)}). Batch the " +
         "query set and union per-batch top-k, or drop the broadcast hint " +
         "so the LUT side shuffles — see adcMaxQueryBatch scaladoc.")
-
-  /** The M distance terms of one subspace: (codeword label, squared
-    * distance of the vector's m-th slice to that codeword's m-th
-    * slice), with ||c_m||^2 folded on the DRIVER in the same
-    * index-ascending double order as the dotF kernel and the oracle's
-    * list_reduce — distances stay bit-identical across engines.
-    */
-  private def subDists(v: Column, m: Int,
-      cb: Array[(Any, Array[Float])]): Seq[(Any, Column)] = {
-    val vm = slice(v, m * SubDim + 1, SubDim)
-    val vv = Portable.dot(vm, vm)
-    cb.toIndexedSeq.map { case (cl, ce) =>
-      val cm = ce.slice(m * SubDim, (m + 1) * SubDim)
-      val cc = cm.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble)
-      (cl, (vv - lit(2.0) * Portable.dot(vm, typedlit(cm))) + lit(cc))
-    }
-  }
-
-  /** (min distance, first codeword attaining it) over one shard's
-    * distance terms. The codebook (and every cl-ascending shard of it)
-    * makes first-match the (dist2, cl) tie-break; the extremum is
-    * bit-identical to one of its inputs, so the equality is exact.
-    * least() needs >= 2 children, hence the singleton special case.
-    */
-  private def argminOf(ds: Seq[(Any, Column)]): (Column, Column) = {
-    val dmin = if (ds.length == 1) ds.head._2 else least(ds.map(_._2): _*)
-    val code = ds.tail.foldLeft(when(ds.head._2 === dmin, lit(ds.head._1))) {
-      case (acc, (cl, d)) => acc.when(d === dmin, lit(cl))
-    }
-    (dmin, code)
-  }
-
-  /** (max cosine, first codeword attaining it) — the coarse-assignment
-    * twin of [[argminOf]] ((cos DESC, cl) tie-break). */
-  private def argmaxOf(cs: Seq[(Any, Column)]): (Column, Column) = {
-    val cmax = if (cs.length == 1) cs.head._2 else greatest(cs.map(_._2): _*)
-    val cl = cs.tail.foldLeft(when(cs.head._2 === cmax, lit(cs.head._1))) {
-      case (acc, (c, v)) => acc.when(v === cmax, lit(c))
-    }
-    (cmax, cl)
-  }
-
-  private def coarseCosines(v: Column,
-      cb: Seq[(Any, Array[Float])]): Seq[(Any, Column)] =
-    cb.toIndexedSeq.map { case (cl, ce) => (cl, Portable.cosine(v, typedlit(ce))) }
-
-  /** ONE corpus pass emitting the per-subspace PQ code (plus, on
-    * request, its squared error and the coarse IVF assignment), with the
-    * unrolled argmin/argmax SHARDED past [[ArgminShardSize]] codewords:
-    * each shard's extremum materializes as its own projection column —
-    * its own generated method, which is what keeps janino's per-method
-    * 64 KB budget intact — and a second projection reduces the shards
-    * with least()/greatest() + first-match. Shards are cl-ascending
-    * slices, so the first shard attaining the extremum contains the
-    * lowest attaining cl and the global (dist2, cl) / (cos DESC, cl)
-    * tie-break is preserved exactly (Ext8Spec pins sharded ≡ unsharded).
-    * At or below the shard size this degenerates to the single
-    * projection e8/e10/e11 always ran — the identical plan.
-    */
-  private[graft] def pqPass(e: DataFrame, cb: Array[(Any, Array[Float])],
-      withErr: Boolean, withAssign: Boolean,
-      shardSize: Int = ArgminShardSize): DataFrame = {
-    require(shardSize >= 1)
-    val shards = cb.grouped(shardSize).toSeq
-    if (shards.length == 1) {
-      val cols = (0 until PqM).flatMap { m =>
-        val (dmin, code) = argminOf(subDists(col("embedding"), m, cb))
-        (if (withErr) Seq(dmin.as(s"err$m")) else Nil) :+ code.as(s"code$m")
-      }
-      val asg =
-        if (withAssign) Seq(argmaxOf(coarseCosines(col("embedding"), cb))._2.as("cl"))
-        else Nil
-      e.select(col("vec_id") +: (asg ++ cols): _*)
-    } else {
-      val l1cols = (for {
-        m <- 0 until PqM; (sh, si) <- shards.zipWithIndex
-      } yield {
-        val (dmin, code) = argminOf(subDists(col("embedding"), m, sh))
-        Seq(dmin.as(s"d${m}_$si"), code.as(s"c${m}_$si"))
-      }).flatten
-      val a1cols =
-        if (withAssign) shards.zipWithIndex.flatMap { case (sh, si) =>
-          val (cmax, cl) = argmaxOf(coarseCosines(col("embedding"), sh))
-          Seq(cmax.as(s"a_$si"), cl.as(s"acl_$si"))
-        } else Nil
-      val l1 = e.select(Seq(col("vec_id")) ++ l1cols ++ a1cols: _*)
-      val red = (0 until PqM).flatMap { m =>
-        val ds = shards.indices.map(si => col(s"d${m}_$si"))
-        val cs = shards.indices.map(si => col(s"c${m}_$si"))
-        val dmin = least(ds: _*)
-        val code = (ds.tail zip cs.tail).foldLeft(when(ds.head === dmin, cs.head)) {
-          case (acc, (d, c)) => acc.when(d === dmin, c)
-        }
-        (if (withErr) Seq(dmin.as(s"err$m")) else Nil) :+ code.as(s"code$m")
-      }
-      val asgRed =
-        if (withAssign) {
-          val as = shards.indices.map(si => col(s"a_$si"))
-          val cls = shards.indices.map(si => col(s"acl_$si"))
-          val cmax = greatest(as: _*)
-          Seq((as.tail zip cls.tail).foldLeft(when(as.head === cmax, cls.head)) {
-            case (acc, (a, c)) => acc.when(a === cmax, c)
-          }.as("cl"))
-        } else Nil
-      l1.select(col("vec_id") +: (asgRed ++ red): _*)
-    }
-  }
 
   // (round 16: the lutMap EXPRESSION form of the ADC lookup table —
   // map_from_entries over k·M struct/dot-product terms per query — is
@@ -617,10 +511,7 @@ object Embeddings {
     val nRows = e.count()
     val cb = if (useTrainedArm(nRows)) pqSampleCodebook(e) else codebook(e)
     val bs = if (batchSize > 0) batchSize else adcMaxQueryBatch(cb.length)
-    val codes = pqPass(e, cb, withErr = false, withAssign = false)
-      .select(col("vec_id"),
-        array((0 until PqM).map(m => col(s"code$m")): _*).as("codes"))
-      .localCheckpoint()
+    val codes = codesPass(e, cb).localCheckpoint()
     val q = queriesIn
       .withColumn("bi", ((row_number().over(
         Window.orderBy("qid")) - 1) / bs).cast("int"))
@@ -848,12 +739,11 @@ object Embeddings {
       s, s"graft_ivfpq_codes_${embFp(s, dir)}${armTag(n)}", "cl", IndexBuckets) {
       val e = Portable.spread(Tables.embeddings(s, dir), "vec_id")
       val ccb = collectCb(ivfpqCentroids(s, dir))
-      if (useTrainedArm(n))
-        trainedCodesPass(e, ccb, collectCb(ivfpqPqcb(s, dir)))
-      else
-        pqPass(e, ccb, withErr = false, withAssign = true)
-          .select(col("vec_id"), col("cl"),
-            array((0 until PqM).map(m => col(s"code$m")): _*).as("codes"))
+      // label arm: the centroids are the label representatives, which
+      // are also the PQ codebook, and the coarse cell is the cosine argmax
+      val trained = useTrainedArm(n)
+      val pcb = if (trained) collectCb(ivfpqPqcb(s, dir)) else ccb
+      codesPass(e, pcb, Some(ccb), cosine = !trained)
     }
   }
 
@@ -980,7 +870,7 @@ object Embeddings {
     val (ccb, pcb, _) = codebooks(e, n)
     // lazy (round 17): single consumer — the ADC join's stage computes
     // the coding pass once; the LogicalRDD plan barrier is unchanged
-    val codes = trainedCodesPass(e, ccb, pcb).localCheckpoint(eager = false)
+    val codes = codesPass(e, pcb, Some(ccb)).localCheckpoint(eager = false)
     val qRows = e.where(col("vec_id") < Similarity.NQueries)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
@@ -1002,16 +892,13 @@ object Embeddings {
     val n = graft.sources.Layout.rowCount(s, s"$dir/embeddings.parquet")
     if (useTrainedArm(n)) return ivfAdcPlanTrained(s, e, n, nprobe)
     val cb = codebook(e)
-    // coarse assignment unrolled into the SAME projection as the PQ
-    // coder (pqPass withAssign: greatest() of the k cosines, first
-    // codeword matching — the cl-ascending codebook makes
-    // first-match the (cos DESC, cl) tie-break of the oracle's
-    // row_number; sharded past ArgminShardSize). One corpus pass
-    // emits (vec_id, cluster, codes); the checkpoint is the same
+    // coarse assignment in the SAME projection as the PQ coder
+    // (codesPass: the kernel's cosine argmax over the cl-ascending
+    // codebook — greatest() + first-match, i.e. the (cos DESC, cl)
+    // tie-break of the oracle's row_number). One corpus pass emits
+    // (vec_id, cluster, codes); the checkpoint is the same
     // CollapseProject barrier e10 needs (n·(M+2) small values).
-    val codes = pqPass(e, cb, withErr = false, withAssign = true)
-      .select(col("vec_id"), col("cl"),
-        array((0 until PqM).map(m => col(s"code$m")): _*).as("codes"))
+    val codes = codesPass(e, cb, Some(cb), cosine = true)
       // lazy (round 17): single consumer (the probe join) computes the
       // coding pass once; the CollapseProject barrier (LogicalRDD) is
       // identical to the eager form
@@ -1259,36 +1146,22 @@ object Embeddings {
       (s, dir) => {
         import Portable._
         val e = Portable.spread(Tables.embeddings(s, dir), "vec_id")
-        // The codebook is O(#labels) rows — collect it and UNROLL the
-        // per-subspace argmin into the row expression: for each m,
-        // least(struct(dist2_to_cw0, cl0), ..., struct(dist2_to_cwk, clk))
-        // — struct ordering is the (dist2, codeword-id) tie-break. The
-        // whole query becomes ONE codegen'd scan projection with zero
-        // joins, zero explode and zero shuffle; the n·k·M-row
-        // crossJoin+explode+aggregate it replaces (the PQ-coding shape
-        // both the window and min(struct) variants shared) measured
-        // ~70 s at sf10 on memory traffic alone. The collect is the
-        // codebook-training driver step every PQ deployment has — k·d
-        // floats, independent of corpus size. ||c_m||² folds on the
-        // driver in the same index-ascending double order as the dotF
-        // kernel and the oracle's list_reduce, so distances stay
-        // bit-identical.
+        // The codebook is O(#labels) rows — collect it and run the
+        // per-subspace argmin as ONE NearestCodewords kernel column
+        // (codesPass): first minimum over the cl-ascending codebook is
+        // the (dist2, codeword-id) tie-break. The whole query is one
+        // codegen'd scan projection with zero joins and zero shuffle;
+        // the n·k·M-row crossJoin+explode+aggregate it replaces
+        // measured ~70 s at sf10 on memory traffic alone. The collect is
+        // the codebook-training driver step every PQ deployment has —
+        // k·d floats, independent of corpus size. Every dot is the same
+        // index-ascending double fold as the oracle's list_reduce, so
+        // distances stay bit-identical. The posexplode only unpacks the
+        // kernel's M (code, err2) structs per vector.
         val cb: Array[(Any, Array[Float])] = codebook(e)
-        // Two-step shape, for CODEGEN reasons: the heavy unrolled
-        // distance math lives in a ProjectExec (which gets
-        // subexpression elimination and per-column method splitting),
-        // and the posexplode above it only touches plain attribute
-        // references. Inlining the unrolled tree into the Generate
-        // stage put everything in one un-splittable doConsume method
-        // and blew janino's 64 KB limit (codegen_errors=6, interpreted
-        // fallback). The argmin itself is primitive-only (least +
-        // first-match — see pqPass, which also shards codebooks past
-        // ArgminShardSize across projection layers).
-        val scored = pqPass(e, cb, withErr = true, withAssign = false)
         graft.Q.norm(
-          scored.select(col("vec_id"), posexplode(array((0 until PqM).map(m =>
-              struct(col(s"code$m").as("code"), col(s"err$m").as("err2"))): _*))
-              .as(Seq("m", "best")))
+          codesPass(e, cb, withErr = true)
+            .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "best")))
             .select(col("vec_id"), col("m").cast("long").as("m"),
               col("best.code").as("code"), col("best.err2").as("err2")),
           "vec_id", "m")
@@ -1409,21 +1282,19 @@ object Embeddings {
       (s, dir) => {
         import Portable._
         val e = Portable.spread(Tables.embeddings(s, dir), "vec_id")
-        // same unrolled-codebook shape as e8 (pqPass: primitive-only
-        // argmin, sharded past ArgminShardSize): PQ codes come out of
-        // one codegen'd scan projection as an M-array per vector — no
-        // crossJoin, no explode, no argmin shuffle
+        // same coding pass as e8 (codesPass, one NearestCodewords
+        // kernel column): PQ codes come out of one codegen'd scan
+        // projection as an M-array per vector — no crossJoin, no
+        // explode, no argmin shuffle
         val cb = codebook(e)
-        // the eager materialization barrier matters: without it,
+        // the materialization barrier matters: without it,
         // CollapseProject inlines the `codes` alias into every one of
-        // the M element_at references below, re-evaluating the whole
-        // unrolled-argmin tree M times per scored row (measured: the
-        // ADC stage ran at the cost of the full coding pass per
-        // reference). The checkpointed (vec_id, codes) frame is
-        // n·(M+1) longs — tiny — and the coding pass runs exactly once.
-        val codes = pqPass(e, cb, withErr = false, withAssign = false)
-          .select(col("vec_id"),
-            array((0 until PqM).map(m => col(s"code$m")): _*).as("codes"))
+        // the M element_at references below, re-running the coding
+        // kernel M times per scored row (measured with the former
+        // unrolled argmin: the ADC stage ran at the cost of the full
+        // coding pass per reference). The checkpointed (vec_id, codes)
+        // frame is n·(M+1) small values and the coding pass runs once.
+        val codes = codesPass(e, cb)
           // lazy (round 17): single consumer (the ADC crossJoin) — see
           // ivfAdcPlan; the CollapseProject barrier is unchanged
           .localCheckpoint(eager = false)
@@ -1462,7 +1333,7 @@ object Embeddings {
     // nearest clusters, and only those candidates are ranked by the
     // compressed-domain ADC distance. Composes the verified pieces —
     // e3's deterministic coarse assignment, e5's multi-probe, e8's
-    // unrolled PQ coding, e10's integer LUT — so the oracle is the same
+    // PQ coding kernel, e10's integer LUT — so the oracle is the same
     // exact arithmetic end-to-end. (Here the coarse quantizer and the PQ
     // codebook share the per-label representative set; separately
     // trained codebooks drop in without changing the plan.)

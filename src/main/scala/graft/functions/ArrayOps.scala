@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftshim.Interop
 import org.apache.spark.sql.types._
 
@@ -206,113 +206,122 @@ case class SimHash32(child: Expression)
 }
 
 /** Per-subspace nearest-codeword indices of a float vector against a
-  * FIXED codebook: for each of `subspaces` equal slices, the index of the
+  * FIXED codebook — the one codeword-assignment kernel of the engine
+  * (PQ coding and coarse IVF assignment, on both codebook arms).
+  *
+  * For each of `subspaces` equal slices it returns the index of the
   * codeword whose same-position slice minimizes squared distance
-  * d2 = (v·v − 2·v·c) + c·c, every dot a sequential index-ascending
-  * double fold — bit-identical to the [[graft.ext.Portable.sqlDot]]
-  * oracle arithmetic — with ties broken by FIRST (lowest) index, which
-  * equals the (d2, cl) tie-break when the codebook rows are cl-ascending.
-  * `subspaces = 1` is whole-vector assignment (the IVF coarse quantizer);
-  * `subspaces = M` is PQ coding.
+  * d2 = (v·v − 2·v·c) + c·c — or, with `cosine`, maximizes the cosine
+  * (v·c) / (‖v‖·‖c‖), a cell being skipped (SQL NULL) when either norm
+  * is zero. Every dot is a sequential index-ascending double fold —
+  * bit-identical to the [[graft.ext.Portable.sqlDot]] oracle arithmetic
+  * and to `Portable.dot`/`Portable.cosine` — and the extremum follows
+  * `least()`/`greatest()` exactly (Spark's double ordering, first
+  * attaining index wins), which equals the (d2, cl) / (cos DESC, cl)
+  * tie-break when the codebook rows are cl-ascending. `subspaces = 1` is
+  * whole-vector assignment (the IVF coarse quantizer); `subspaces = M` is
+  * PQ coding. With `withScore` each element is a struct (idx, score)
+  * carrying the attained minimum d2 (or maximum cosine).
+  *
+  * The result is NULL when the vector's length differs from the
+  * codewords' (the dotF length-mismatch convention) and, in cosine mode,
+  * when every cosine is NULL (greatest() of all-NULL inputs).
   *
   * The codebook rides as a REFERENCED OBJECT (k·d floats — ≤1 MB at the
   * 4096-codeword cap), not as unrolled literal terms: a 448-codeword
   * expression-tree argmin measured a 233 MB task binary and heartbeat
-  * RPC timeouts at data/sf10 — the kernel's task cost is one array
-  * reference plus a tight generated k·d loop.
+  * RPC timeouts at data/sf10, and the 10-codeword label-arm unrolling
+  * spent over a second per e10 invocation in driver planning — the
+  * kernel's task cost is one array reference plus a tight k·d loop.
   */
 case class NearestCodewords(child: Expression, codebook: Array[Array[Float]],
-    subspaces: Int) extends UnaryExpression {
+    subspaces: Int, cosine: Boolean = false, withScore: Boolean = false)
+    extends UnaryExpression {
 
   require(codebook.nonEmpty && subspaces >= 1)
+  require(!cosine || subspaces == 1, "cosine assignment is whole-vector")
 
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def dataType: DataType =
+    if (!withScore) ArrayType(IntegerType, containsNull = false)
+    else ArrayType(StructType(Seq(
+      StructField("idx", IntegerType, nullable = false),
+      StructField("score", DoubleType, nullable = false))), containsNull = false)
   override def prettyName: String = "nearest_codewords"
+  override def nullable: Boolean = true
 
-  private def subDim: Int = codebook(0).length / subspaces
+  private def dims: Int = codebook(0).length
+  private def subDim: Int = dims / subspaces
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** Per (codeword, subspace): c·c for d2, ‖c‖ for cosine — row-
+    * independent, so folded once per expression instance. */
+  @transient private lazy val cwTerm: Array[Double] =
+    Array.tabulate(codebook.length * subspaces) { jm =>
+      val c = codebook(jm / subspaces)
+      val from = (jm % subspaces) * subDim
+      var cc = 0.0
+      var i = 0
+      while (i < subDim) { val y = c(from + i).toDouble; cc += y * y; i += 1 }
+      if (cosine) math.sqrt(cc) else cc
+    }
+
+  /** Shared by interpreted eval and the generated code (called through a
+    * referenced object, the [[WinnowSelK]] pattern). */
+  def compute(v: ArrayData): ArrayData = {
+    if (v.numElements() != dims) return null
     val sub = subDim
-    val out = new Array[Any](subspaces)
+    val k = codebook.length
+    val term = cwTerm
+    val idx = new Array[Int](subspaces)
+    val score = new Array[Double](subspaces)
     var m = 0
     while (m < subspaces) {
       val from = m * sub
       var vv = 0.0
       var i = 0
-      while (i < sub) {
-        val x = v.getFloat(from + i).toDouble; vv += x * x; i += 1
-      }
-      var best = Double.PositiveInfinity
-      var bestJ = 0
+      while (i < sub) { val x = v.getFloat(from + i).toDouble; vv += x * x; i += 1 }
+      val nv = math.sqrt(vv)
+      var best = 0.0
+      var bestJ = -1
       var j = 0
-      while (j < codebook.length) {
+      while (j < k) {
         val c = codebook(j)
         var vc = 0.0
         i = 0
         while (i < sub) {
           vc += v.getFloat(from + i).toDouble * c(from + i).toDouble; i += 1
         }
-        var cc = 0.0
-        i = 0
-        while (i < sub) { val y = c(from + i).toDouble; cc += y * y; i += 1 }
-        val d2 = (vv - 2.0 * vc) + cc
-        if (d2 < best) { best = d2; bestJ = j }
+        val t = term(j * subspaces + m)
+        if (!cosine) {
+          val d2 = (vv - 2.0 * vc) + t
+          if (bestJ < 0 || SQLOrderingUtil.compareDoubles(d2, best) < 0) {
+            best = d2; bestJ = j
+          }
+        } else if (nv != 0.0 && t != 0.0) {
+          val cos = vc / (nv * t)
+          if (bestJ < 0 || SQLOrderingUtil.compareDoubles(cos, best) > 0) {
+            best = cos; bestJ = j
+          }
+        }
         j += 1
       }
-      out(m) = bestJ
+      if (bestJ < 0) return null
+      idx(m) = bestJ
+      score(m) = best
       m += 1
     }
-    new GenericArrayData(out)
+    if (!withScore) UnsafeArrayData.fromPrimitiveArray(idx)
+    else new GenericArrayData(Array.tabulate[Any](subspaces)(m =>
+      InternalRow(idx(m), score(m))))
   }
+
+  override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
-      val cb = ctx.addReferenceObj("codebook", codebook, "float[][]")
-      val out = ctx.freshName("out")
-      val m = ctx.freshName("m")
-      val from = ctx.freshName("from")
-      val vv = ctx.freshName("vv")
-      val vc = ctx.freshName("vc")
-      val cc = ctx.freshName("cc")
-      val d2 = ctx.freshName("d2")
-      val best = ctx.freshName("best")
-      val bestJ = ctx.freshName("bestJ")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int[] $out = new int[$subspaces];
-         |int ${from};
-         |for (int $m = 0; $m < $subspaces; $m++) {
-         |  $from = $m * $subDim;
-         |  double $vv = 0.0;
-         |  for (int $i = 0; $i < $subDim; $i++) {
-         |    double $xv = (double) $v.getFloat($from + $i);
-         |    $vv += $xv * $xv;
-         |  }
-         |  double $best = Double.POSITIVE_INFINITY;
-         |  int $bestJ = 0;
-         |  for (int $j = 0; $j < ${codebook.length}; $j++) {
-         |    float[] $c = $cb[$j];
-         |    double $vc = 0.0;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      $vc += (double) $v.getFloat($from + $i) * (double) $c[$from + $i];
-         |    }
-         |    double $cc = 0.0;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      double $yv = (double) $c[$from + $i];
-         |      $cc += $yv * $yv;
-         |    }
-         |    double $d2 = ($vv - 2.0 * $vc) + $cc;
-         |    if ($d2 < $best) { $best = $d2; $bestJ = $j; }
-         |  }
-         |  $out[$m] = $bestJ;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
+      val self = ctx.addReferenceObj("nearest", this,
+        classOf[NearestCodewords].getName)
+      s"""${ev.value} = $self.compute($v);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): NearestCodewords =
@@ -402,8 +411,9 @@ object ArrayOps {
   def shingles3(toks: Column): Column =
     Interop.column(Shingles3K(Interop.expression(toks)))
   def nearestCodewords(vec: Column, codebook: Array[Array[Float]],
-      subspaces: Int): Column =
-    Interop.column(NearestCodewords(Interop.expression(vec), codebook, subspaces))
+      subspaces: Int, cosine: Boolean = false, withScore: Boolean = false): Column =
+    Interop.column(NearestCodewords(Interop.expression(vec), codebook, subspaces,
+      cosine, withScore))
   def winnowSel(toks: Column, w: Int): Column =
     Interop.column(WinnowSelK(Interop.expression(toks), w))
   def polyHash(c: Column): Column =

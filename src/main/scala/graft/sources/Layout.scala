@@ -143,14 +143,13 @@ object Layout {
     * Spark jobs: size-dispatch decisions (pair-tier, codebook arm,
     * SRP geometry) used to spend a sequential count job per query build
     * (~0.1–0.3 s each at sf0.1; the ivfAdc one even paid its upstream
-    * repartition). Memoized per path exactly like the Tables schema
-    * cache (round 16): testdata and artifacts are write-once per JVM,
-    * and this holds one long of METADATA — never data, never results.
+    * repartition). Memoized on the path's identity like the Tables
+    * schema cache ([[PathMemo]]): a rewritten path is re-read, and the
+    * memo holds one long of METADATA — never data, never results.
     * Falls back to a real count if a footer is unreadable. */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val rowCountCache = new PathMemo[java.lang.Long]
   def rowCount(spark: SparkSession, p: String): Long =
-    rowCountCache.computeIfAbsent(p, { _ =>
+    rowCountCache(spark, p) {
       val conf = spark.sparkContext.hadoopConfiguration
       val path = new org.apache.hadoop.fs.Path(p)
       try {
@@ -173,7 +172,32 @@ object Layout {
             s"falling back to a count job: $e")
           java.lang.Long.valueOf(spark.read.parquet(p).count())
       }
-    }): Long
+    }
+
+  /** A per-path METADATA memo keyed on the path's current identity — the
+    * [[sourceFingerprint]] inputs (qualified path; name, length and mtime
+    * of each file one level deep) — not on the path alone: a path
+    * rewritten inside one JVM (a regenerated table, a re-created
+    * artifact) misses and recomputes instead of answering with the old
+    * file's schema or count. One entry per path; a path that cannot be
+    * stat'ed is not memoized, so `compute` reports the real error. The
+    * identity is read BEFORE computing, so a rewrite racing the compute
+    * can only cost a recompute, never pin a stale value. */
+  private[graft] final class PathMemo[V] {
+    private val memo =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, V)]()
+    def apply(spark: SparkSession, p: String)(compute: => V): V = {
+      val id =
+        try sourceFingerprint(spark, p)
+        catch { case scala.util.control.NonFatal(_) => null }
+      if (id == null) compute
+      else {
+        val hit = memo.get(p)
+        if (hit != null && hit._1 == id) hit._2
+        else { val v = compute; memo.put(p, (id, v)); v }
+      }
+    }
+  }
 
   /** THE small-source tier line (round-16 advice: this 512 MB constant
     * was duplicated in four places — Bench, Boilerplate, Basket, Lm —
@@ -322,9 +346,8 @@ object Layout {
 
   /** Row count of a persisted artifact table via [[rowCount]] footer
     * metadata — zero jobs. The artifact must already exist (call
-    * [[ensureBucketedArtifact]] first); identity caveats are the same
-    * as the schema/rowCount caches: artifacts are fingerprint-named and
-    * write-once per JVM. */
+    * [[ensureBucketedArtifact]] first); the count is memoized on the
+    * table directory's identity ([[PathMemo]]). */
   def artifactRowCount(spark: SparkSession, baseName: String,
       bucketCol: String, buckets: Int): Long = {
     val table = artifactTableName(baseName, bucketCol, buckets)

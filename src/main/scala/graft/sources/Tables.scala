@@ -25,22 +25,21 @@ object Tables {
   /** Round-16 (guide §6, driver-side planning cost): every bare
     * `spark.read.parquet(path)` runs a schema-inference job (footer
     * read) BEFORE the query's own jobs — ~50-80 ms per call here, and a
-    * distributed footer-sampling job on a real multi-file table. The
-    * schema of a given parquet path is immutable for the life of this
-    * JVM (testdata and artifacts are write-once), so infer it once and
-    * pass it explicitly on every later read. Keyed per path; holds
-    * StructType metadata only (never data, never results — bench/oracle
-    * runs still compute everything from the files).
+    * distributed footer-sampling job on a real multi-file table. So
+    * infer each path's schema once and pass it explicitly on every later
+    * read. Keyed on the path's identity (name, length and mtime of its
+    * files — [[Layout.PathMemo]]), so a path rewritten inside this JVM
+    * is re-inferred; holds StructType metadata only (never data, never
+    * results — bench/oracle runs still compute everything from the
+    * files).
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new Layout.PathMemo[org.apache.spark.sql.types.StructType]
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val schema = schemaCache(spark, path)(spark.read.parquet(path).schema)
     val raw = spark.read.schema(schema).parquet(path)
     if (!raw.schema.fields.exists(_.dataType == TimestampNTZType)) raw
     else raw.select(raw.schema.fields.map { f =>

@@ -33,7 +33,7 @@ object IvfDiag {
     val (ccb, pcb, _) = Embeddings.codebooks(e, n)
     println(s"[diag] n=$n coarseK=${ccb.length} pq=${pcb.length}")
 
-    val codes = Embeddings.trainedCodesPass(e, ccb, pcb).cache()
+    val codes = Embeddings.codesPass(e, pcb, Some(ccb)).cache()
     val qRows = e.where(col("vec_id") < Similarity.NQueries)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)

@@ -103,14 +103,14 @@ class Ext5Spec extends SparkTestBase {
     adc.unpersist()
   }
 
-  test("PQ codebook guard: shards past 1024 codewords, refuses past the driver bound") {
+  test("PQ codebook guard: accepts 1025 codewords, refuses past the driver bound") {
     import spark.implicits._
     def frame(labels: Int) =
       (0 until labels).map(l => (l.toLong, Array(l.toFloat, 1.0f), l))
         .toDF("vec_id", "embedding", "label")
-    // since dd247de the unrolled argmin SHARDS past ArgminShardSize
-    // (janino's 64 KB budget is per generated method), so 1025 codewords
-    // is a working codebook, label-ascending with the min-vec_id
+    // the NearestCodewords kernel carries the codebook as one array (no
+    // per-method bytecode budget to outgrow), so 1025 codewords is a
+    // working codebook, label-ascending with the min-vec_id
     // representative
     val cb = graft.ext.Embeddings.codebook(frame(1025))
     assert(cb.length == 1025)

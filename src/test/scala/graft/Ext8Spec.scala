@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Round-8 wave: properties of the full PageRank solver
@@ -74,11 +75,38 @@ class Ext8Spec extends SparkTestBase {
     assert(sinks > 0, "no dangling vertices — the redistribution term would be vacuous")
   }
 
-  test("pqPass: sharded argmin/argmax equals the single-projection unrolled form") {
-    // 10 codewords, shard sizes 3 and 1 force the layered shard-reduce
-    // path; 1024 is the production single-projection shape — all three
-    // must agree bit-for-bit on every (cl, code, err) cell, including
-    // the cross-shard (dist2, cl)/(cos DESC, cl) tie-breaks
+  /** The former label-arm coder, kept here as the test-only reference:
+    * per subspace, one literal squared-distance term per codeword reduced
+    * by least() + first match; the coarse cell by greatest() of the
+    * literal cosines + first match. Emits (vec_id, cl, code0, err0, …). */
+  private def unrolledCodes(e: DataFrame, cb: Array[(Any, Array[Float])]): DataFrame = {
+    import ext.Embeddings.{PqM, SubDim}
+    def firstMatch(ds: Seq[(Any, Column)], best: Column): Column =
+      ds.tail.foldLeft(when(ds.head._2 === best, lit(ds.head._1))) {
+        case (acc, (cl, d)) => acc.when(d === best, lit(cl))
+      }
+    val v = col("embedding")
+    val codes = (0 until PqM).flatMap { m =>
+      val vm = slice(v, m * SubDim + 1, SubDim)
+      val vv = ext.Portable.dot(vm, vm)
+      val ds = cb.toSeq.map { case (cl, ce) =>
+        val cm = ce.slice(m * SubDim, (m + 1) * SubDim)
+        val cc = cm.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble)
+        (cl, (vv - lit(2.0) * ext.Portable.dot(vm, typedlit(cm))) + lit(cc))
+      }
+      val dmin = least(ds.map(_._2): _*)
+      Seq(firstMatch(ds, dmin).as(s"code$m"), dmin.as(s"err$m"))
+    }
+    val cs = cb.toSeq.map { case (cl, ce) => (cl, ext.Portable.cosine(v, typedlit(ce))) }
+    e.select(col("vec_id") +: firstMatch(cs, greatest(cs.map(_._2): _*)).as("cl") +: codes: _*)
+  }
+
+  test("codesPass: the NearestCodewords coding pass equals the unrolled-literal form") {
+    // 30 rows over 10 label codewords, every component on a 17-step
+    // grid (rows i and i + 17 carry the same vector), so distances
+    // collide — every (cl, code, err) cell must agree bit for bit,
+    // including the (dist2, cl)/(cos DESC, cl) first-match tie-breaks and
+    // the int32 label type of cl and code
     val dims = ext.Embeddings.Dims
     val rows = (0 until 30).map { i =>
       val emb = Array.tabulate(dims)(d => (((i * 31 + d * 7) % 17) - 8) / 8.0f)
@@ -86,12 +114,19 @@ class Ext8Spec extends SparkTestBase {
     }
     val e = rows.toDF("vec_id", "label", "embedding")
     val cb = ext.Embeddings.codebook(e)
-    def run(shard: Int) =
-      ext.Embeddings.pqPass(e, cb, withErr = true, withAssign = true, shardSize = shard)
-        .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    val single = run(1024)
-    assert(single == run(3), "3-codeword shards diverge from unrolled")
-    assert(single == run(1), "1-codeword shards diverge from unrolled")
+    def cells(df: DataFrame) = df.orderBy("vec_id").collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    }).toSeq
+    val kernel = ext.Embeddings.codesPass(e, cb, Some(cb), cosine = true, withErr = true)
+    val flat = kernel.select(col("vec_id") +: col("cl") +:
+      (0 until ext.Embeddings.PqM).flatMap { m =>
+        val x = element_at(col("codes"), m + 1)
+        Seq(x("code").as(s"code$m"), x("err2").as(s"err$m"))
+      }: _*)
+    val ref = unrolledCodes(e, cb)
+    assert(flat.schema.map(_.dataType) == ref.schema.map(_.dataType))
+    assert(cells(flat) == cells(ref), "kernel coding pass diverges from the unrolled form")
   }
 
   test("adcTopK: broadcast-batched query slices reproduce e10 exactly") {

@@ -156,40 +156,123 @@ class KernelCodegenSpec extends SparkTestBase {
     }
   }
 
-  test("NearestCodewords: codegen ≡ interpreted ≡ reference folds, first-min tie-break") {
+  /** NearestCodewords three ways, as (index, raw score bits) per subspace
+    * or None for a NULL result: generated code over an RDD-backed frame (a
+    * local Seq frame would be folded by ConvertToLocalRelation, i.e.
+    * evaluated interpreted), interpreted `eval`, and plain Scala folds —
+    * `least()`/`greatest()` + first match over the sequential double
+    * dots, NULL cosines skipped. The generated projection carries both
+    * output shapes, so two kernel instances share one generated class. */
+  private def nearestThreeWays(vecs: Seq[Array[Float]], cb: Array[Array[Float]],
+      m: Int, cosine: Boolean) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    type Out = Option[Seq[(Int, Long)]]
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     val s = spark
     import s.implicits._
-    val rnd = new scala.util.Random(7)
-    val dims = 16
-    val cb = Array.fill(6)(Array.fill(dims)(rnd.nextFloat() * 2 - 1))
-    // duplicate codeword 2 as codeword 5: any vector nearest to it must
-    // report index 2 (first minimum), the oracle's (d2, cl) tie-break
-    cb(5) = cb(2).clone()
-    val vecs = Seq.fill(50)(Array.fill(dims)(rnd.nextFloat() * 2 - 1)) :+
-      cb(2).clone() // exact tie on the duplicated codeword
-    def ref(v: Array[Float], subspaces: Int): Seq[Int] = {
-      val sub = dims / subspaces
-      (0 until subspaces).map { m =>
-        val from = m * sub
+    val (codegen, codegenIdx) = withCodegenOnly {
+      val rows = s.sparkContext.parallelize(vecs, 2).toDF("v")
+        .select(
+          ArrayOps.nearestCodewords(col("v"), cb, m, cosine, withScore = true),
+          ArrayOps.nearestCodewords(col("v"), cb, m, cosine))
+        .collect()
+      (rows.map(r => Option(r.getSeq[Row](0))
+          .map(_.map(x => (x.getInt(0), bits(x.getDouble(1)))))).toSeq: Seq[Out],
+        rows.map(r => Option(r.getSeq[Int](1))).toSeq)
+    }
+    val expr = graft.functions.NearestCodewords(
+      BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = true),
+      cb, m, cosine, withScore = true)
+    val interp: Seq[Out] = vecs.map(v =>
+      Option(expr.eval(InternalRow(ArrayData.toArrayData(v)))).map { a =>
+        val ad = a.asInstanceOf[ArrayData]
+        (0 until ad.numElements()).map { i =>
+          val st = ad.getStruct(i, 2); (st.getInt(0), bits(st.getDouble(1)))
+        }
+      })
+    val ref: Seq[Out] = vecs.map { v =>
+      val sub = v.length / m
+      val per = (0 until m).map { sm =>
+        val from = sm * sub
         def fold(a: Array[Float], b: Array[Float]): Double = {
           var acc = 0.0; var i = 0
           while (i < sub) { acc += a(from + i).toDouble * b(from + i).toDouble; i += 1 }
           acc
         }
         val vv = fold(v, v)
-        cb.zipWithIndex.map { case (c, j) =>
-          ((vv - 2.0 * fold(v, c)) + fold(c, c), j)
-        }.reduceLeft((a, b) => if (b._1 < a._1) b else a)._2
+        val scored = cb.indices.flatMap { j =>
+          val c = cb(j)
+          if (!cosine) Some(((vv - 2.0 * fold(v, c)) + fold(c, c), j))
+          else {
+            val nv = math.sqrt(vv); val nc = math.sqrt(fold(c, c))
+            if (nv == 0.0 || nc == 0.0) None else Some((fold(v, c) / (nv * nc), j))
+          }
+        }
+        scored.reduceLeftOption((a, b) =>
+          if (if (cosine) b._1 > a._1 else b._1 < a._1) b else a)
       }
+      if (per.exists(_.isEmpty)) None
+      else Some(per.flatten.map { case (d, j) => (j, bits(d)) })
     }
-    Seq(1, 4).foreach { m =>
-      val got = withCodegenOnly {
-        vecs.toDF("v")
-          .select(ArrayOps.nearestCodewords(col("v"), cb, m).as("idx"))
-          .collect().map(_.getSeq[Int](0).toSeq).toSeq
-      }
-      val interp = vecs.map(ref(_, m))
-      assert(got == interp, s"NearestCodewords m=$m diverged from reference folds")
+    assert(codegen == interp, s"m=$m cosine=$cosine: codegen diverged from interpreted")
+    assert(codegen == ref, s"m=$m cosine=$cosine: kernel diverged from reference folds")
+    assert(codegenIdx == codegen.map(_.map(_.map(_._1))),
+      s"m=$m cosine=$cosine: index-only output diverged from the scored output")
+    codegen
+  }
+
+  /** Codebook fixtures: random codewords plus an exact duplicate of
+    * codeword `dupOf` at the end (ties must resolve to `dupOf`, the first
+    * minimum) and an all-zero codeword at `zero`; vectors are random plus
+    * a copy of `dupOf`, a scaled copy of it and the zero vector. */
+  private def nearestFixture(k: Int, dupOf: Int, zero: Int, nRandom: Int,
+      seed: Int): (Array[Array[Float]], Seq[Array[Float]]) = {
+    val rnd = new scala.util.Random(seed)
+    val dims = 16
+    val cb = Array.fill(k)(Array.fill(dims)(rnd.nextFloat() * 2 - 1))
+    cb(k - 1) = cb(dupOf).clone()
+    cb(zero) = new Array[Float](dims)
+    val vecs = Seq.fill(nRandom)(Array.fill(dims)(rnd.nextFloat() * 2 - 1)) ++
+      Seq(cb(dupOf).clone(), cb(dupOf).map(_ * 2), new Array[Float](dims))
+    (cb, vecs)
+  }
+
+  test("NearestCodewords: codegen ≡ interpreted ≡ reference folds, first-min tie-break") {
+    // 6 codewords, and 1 025 — one past where the former unrolled argmin
+    // split into shards; the duplicate of codeword 2 / 3 is an exact tie
+    // every vector nearest to it must resolve to the lower index (the
+    // oracle's (d2, cl) tie-break), including the zero vector / zero
+    // codeword pair (d2 = 0, no NULL in this mode)
+    Seq((6, 2, 4, 50, 7), (1025, 3, 700, 20, 9)).foreach {
+      case (k, dupOf, zero, n, seed) =>
+        val (cb, vecs) = nearestFixture(k, dupOf, zero, n, seed)
+        Seq(1, 4).foreach { m =>
+          val got = nearestThreeWays(vecs, cb, m, cosine = false)
+          assert(got(n).get.forall(_._1 == dupOf), s"k=$k m=$m: tie not first-min")
+          assert(got(n).get.forall(_._2 == 0L), s"k=$k m=$m: self-distance not +0.0")
+          if (m == 1) assert(got(n + 2).get.head._1 == zero,
+            s"k=$k: the zero vector must land on the zero codeword")
+        }
+    }
+  }
+
+  test("NearestCodewords cosine mode: codegen ≡ interpreted ≡ greatest() first-match, NULL cells skipped") {
+    Seq((6, 2, 4, 50, 7), (1025, 3, 700, 20, 9)).foreach {
+      case (k, dupOf, zero, n, seed) =>
+        val (cb, vecs) = nearestFixture(k, dupOf, zero, n, seed)
+        val got = nearestThreeWays(vecs, cb, 1, cosine = true)
+        // the copy and the scaled copy tie between dupOf and its
+        // duplicate: first maximum wins
+        assert(got(n).get.head._1 == dupOf && got(n + 1).get.head._1 == dupOf,
+          s"k=$k: cosine tie not first-max")
+        // zero-norm codeword: its NULL cosine is never chosen
+        assert(got.flatten.forall(_.head._1 != zero), s"k=$k: NULL cosine cell chosen")
+        // zero-norm vector: every cosine is NULL, so the cell is NULL
+        assert(got(n + 2).isEmpty, s"k=$k: all-NULL cosines must give NULL")
     }
   }
 

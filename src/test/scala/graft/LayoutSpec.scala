@@ -95,6 +95,26 @@ class LayoutSpec extends SparkTestBase {
     } finally deleteRec(Paths.get(out).getParent)
   }
 
+  test("schema cache and rowCount memo: a path rewritten in one JVM reads back its new schema and count") {
+    // both memos are keyed on the path's identity (file names, lengths,
+    // mtimes), so overwriting the same path must miss and re-read
+    val dir = Files.createTempDirectory("graft-rewrite")
+    try {
+      val s = spark
+      import s.implicits._
+      val path = dir.resolve("t.parquet").toString
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(path)
+      assert(sources.Tables(spark, dir.toString, "t").columns.toSeq == Seq("id", "s"))
+      assert(Layout.rowCount(spark, path) == 2L)
+      Seq((1L, 1.5, true), (2L, 2.5, false), (3L, 3.5, true)).toDF("id", "x", "flag")
+        .write.mode("overwrite").parquet(path)
+      val t = sources.Tables(spark, dir.toString, "t")
+      assert(t.columns.toSeq == Seq("id", "x", "flag"))
+      assert(t.where(col("flag")).agg(sum("x")).head().getDouble(0) == 5.0)
+      assert(Layout.rowCount(spark, path) == 3L)
+    } finally deleteRec(dir)
+  }
+
   test("writeBucketed: co-bucketed join plans with zero shuffle") {
     val a = "graft_bucket_a"; val b = "graft_bucket_b"
     // broadcast would win at spec scale and hide the layout; the claim
