@@ -2,7 +2,8 @@ package graft.ext
 
 import graft.Q
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -141,20 +142,24 @@ object Embeddings {
     * literal array that keeps the codebook key's NATIVE type — int32
     * labels on the label arm (so e8's egress schema is the label's),
     * long ids on the trained arm. */
-  private def idAt(cb: Array[(Any, Array[Float])], i: Column): Column = {
-    val ids = cb.head._1 match {
-      case _: java.lang.Integer => typedlit(cb.map(_._1.asInstanceOf[Int]).toSeq)
-      case _ => typedlit(cb.map(_._1.asInstanceOf[Number].longValue).toSeq)
+  private def idAt(ids: Array[Any], i: Column): Column = {
+    val arr = ids.head match {
+      case _: java.lang.Integer => typedlit(ids.map(_.asInstanceOf[Int]).toSeq)
+      case _ => typedlit(ids.map(_.asInstanceOf[Number].longValue).toSeq)
     }
-    element_at(ids, i + 1)
+    element_at(arr, i + 1)
   }
+
+  /** float32 codebooks widen exactly for the double-typed kernel. */
+  private def widen(cb: Array[(Any, Array[Float])]): Array[(Any, Array[Double])] =
+    cb.map { case (cl, ce) => (cl, ce.map(_.toDouble)) }
 
   /** Whole-vector nearest codeword id of `embedding` — (d2, cl) ties, or
     * with `cosine` the label arm's (cos DESC, cl) convention (NULL when
     * every cosine is NULL). The codebook MUST be cl-ascending: the
     * kernel's first-extremum index tie-break then equals the oracle's. */
-  private def nearestCell(cb: Array[(Any, Array[Float])], cosine: Boolean): Column =
-    idAt(cb, element_at(graft.functions.ArrayOps.nearestCodewords(
+  private def nearestCell(cb: Array[(Any, Array[Double])], cosine: Boolean): Column =
+    idAt(cb.map(_._1), element_at(graft.functions.ArrayOps.nearestCodewords(
       col("embedding"), cb.map(_._2), 1, cosine), 1))
 
   /** THE corpus coding pass — every PQ/IVF codeword assignment the
@@ -169,54 +174,28 @@ object Embeddings {
   private[graft] def codesPass(e: DataFrame, pcb: Array[(Any, Array[Float])],
       coarse: Option[Array[(Any, Array[Float])]] = None,
       cosine: Boolean = false, withErr: Boolean = false): DataFrame = {
+    val ids = pcb.map(_._1)
     val pq = graft.functions.ArrayOps.nearestCodewords(
-      col("embedding"), pcb.map(_._2), PqM, withScore = withErr)
+      col("embedding"), widen(pcb).map(_._2), PqM, withScore = withErr)
     val codes =
       if (withErr) transform(pq, x =>
-        struct(idAt(pcb, x("idx")).as("code"), x("score").as("err2")))
-      else transform(pq, i => idAt(pcb, i))
-    val cl = coarse.map(ccb => nearestCell(ccb, cosine).as("cl"))
+        struct(idAt(ids, x("idx")).as("code"), x("score").as("err2")))
+      else transform(pq, i => idAt(ids, i))
+    val cl = coarse.map(ccb => nearestCell(widen(ccb), cosine).as("cl"))
     e.select(col("vec_id") +: cl.toSeq :+ codes.as("codes"): _*)
   }
 
   /** Lloyd-trained coarse codebook: seed = the first-k vectors (the
-    * SemDedup sqrt-k seed), then up to `rounds` assign → re-estimate
-    * rounds. Centroid components are CAST(qsum/(1e6·n) AS FLOAT) — one
-    * correctly-rounded double division over exact integer stats, then one
-    * double→float rounding, so both engines (and any shuffle order)
-    * produce bit-identical float32 centroids, which is also what a real
-    * index stores. Early exit ONLY on an exact integer fixpoint of the
-    * (cl, pos, n, qsum) stats — identical stats ⇒ identical centroids ⇒
-    * every further round reproduces the same frame, so the fixed-round
-    * oracle chain agrees (the e12 contract). Driver state per round:
-    * k·d stat rows + k·d floats — index-header-sized by construction. */
-  private[graft] def trainCoarse(e: DataFrame, k: Int,
-      rounds: Int = CoarseRounds): Array[(Any, Array[Float])] = {
-    def centroidsOf(stats: Array[(Long, Long, Long, Double)]): Array[(Any, Array[Float])] =
-      stats.groupBy(_._1).toArray.sortBy(_._1).map { case (cl, rows) =>
-        (cl: Any,
-          rows.sortBy(_._2).map { case (_, _, n, qsum) =>
-            (qsum / (1e6 * n)).toFloat
-          })
-      }
-    var cb: Array[(Any, Array[Float])] = e.where(col("vec_id") < k)
+    * SemDedup sqrt-k seed), then up to [[CoarseRounds]] rounds of the
+    * shared [[lloyd]] loop with float32 centroids, CAST(qsum/(1e6·n) AS
+    * FLOAT) — bit-identical on both engines and any shuffle order, and
+    * what a real index stores. */
+  private[graft] def trainCoarse(e: DataFrame, k: Int): Array[(Any, Array[Float])] = {
+    val seed = e.where(col("vec_id") < k)
       .select(col("vec_id"), col("embedding")).orderBy("vec_id").collect()
-      .map(r => (r.getLong(0): Any, r.getSeq[Float](1).toArray))
-    var prev: Array[(Long, Long, Long, Double)] = null
-    var i = 0
-    var converged = false
-    while (i < rounds && !converged) {
-      val stats = kmStats(e.select(col("vec_id"), col("embedding"),
-          nearestCell(cb, cosine = false).as("cl")), "cl")
-        .collect()
-        .map(r => (r.get(0).asInstanceOf[Number].longValue, r.getLong(1),
-          r.getLong(2), r.getDouble(3)))
-        .sortBy(s => (s._1, s._2))
-      if (prev != null && stats.sameElements(prev)) converged = true
-      else { cb = centroidsOf(stats); prev = stats }
-      i += 1
-    }
-    cb
+      .map(r => (r.getLong(0): Any, r.getSeq[Float](1).map(_.toDouble).toArray))
+    val (last, _, _) = lloyd(e, seed, None, CoarseRounds, float32 = true)
+    centroidsOf(last, float32 = true).map { case (cl, ce) => (cl, ce.map(_.toFloat)) }
   }
 
   /** The size-dispatched (coarse codebook, PQ codebook, distance-metric?)
@@ -285,14 +264,14 @@ object Embeddings {
     * (mirrors [[Portable.sqlDot]] exactly: per-index double products,
     * index-ascending accumulation). The codegen kernel
     * [[graft.functions.ArrayOps.dotF]] is the float-array fast path; this
-    * HOF form exists for the double-array centroid math in e9 where one
-    * side is not a float column.
+    * HOF form exists for the double-array axis math of the PCA power
+    * iteration, where one side is not a float column.
     */
   private def dotD(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  // ---- Lloyd-iteration building blocks (shared by e9 and e12) ---------
+  // ---- Lloyd's k-means: ONE driver-side loop (e9, e12, trainCoarse) ---
 
   /** Per-(cluster, pos) sufficient statistics over 1e-6-quantized
     * components: (cl, pos, n, qsum). Exact integer sums — identical
@@ -305,34 +284,50 @@ object Embeddings {
       .groupBy("cl", "pos")
       .agg(count(lit(1)).as("n"), sum(col("qv")).cast("double").as("qsum"))
 
-  /** pos-ordered centroid arrays from the stats frame (array_sort on
-    * struct<pos,..> sorts by pos — the x_mixture sorted-fold pattern).
-    * Components are qsum/(1e6·n): a single correctly-rounded division
-    * over exact integers, so both engines see the same doubles. */
-  private def kmCentroids(g: DataFrame): DataFrame =
-    g.select(col("cl"),
-        struct(col("pos"), (col("qsum") / (lit(1e6) * col("n"))).as("c")).as("pc"))
-      .groupBy("cl").agg(
-        transform(array_sort(collect_list(col("pc"))), p => p.getField("c")).as("ce"))
+  /** One round's k·d collected (cl, pos, n, qsum) statistics, (cl, pos)-
+    * sorted, with the [[kmStats]] schema (cl keeps the key's type). */
+  private final case class KmRound(stats: Array[(Any, Long, Long, Double)],
+      schema: StructType)
 
-  /** Nearest-centroid assignment: centroids broadcast (O(k·d)), distance
-    * is per-row math, the (dist², cl) tie-break mirrors the oracle's
-    * row_number ORDER BY exactly. */
-  private def kmAssign(e: DataFrame, cent: DataFrame): DataFrame = {
-    // ce·ce is a per-centroid CONSTANT: fold it once on the k-row
-    // centroid frame instead of interpreted per (row × centroid) cross-
-    // join pair (round-16 HOF audit — same IEEE fold, same value, half
-    // the per-pair interpreted work; the x·ce cross term stays dotD
-    // because ce is double-typed centroid math and casting it to ride
-    // the float kernel would change the oracle-mirrored arithmetic).
-    val centC = cent.withColumn("cc2", dotD(col("ce"), col("ce")))
-    val dist2 = (graft.functions.ArrayOps.dotF(col("embedding"), col("embedding"))
-      - lit(2.0) * dotD(col("embedding"), col("ce"))) + col("cc2")
-    val wv = Window.partitionBy("vec_id").orderBy(dist2, col("cl"))
-    e.crossJoin(broadcast(centC))
-      .withColumn("rn", row_number().over(wv))
-      .where(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cl"))
+  private def collectRound(g: DataFrame): KmRound =
+    KmRound(g.collect().map { r =>
+      require(!r.isNullAt(0), "k-means statistics row without a cluster id")
+      (r.get(0), r.getLong(1), r.getLong(2), r.getDouble(3))
+    }.sortBy(t => (t._1.asInstanceOf[Number].longValue, t._2)), g.schema)
+
+  /** cl-ascending, pos-ordered centroids: qsum/(1e6·n), one correctly-
+    * rounded division over exact integers, then optionally float32. */
+  private def centroidsOf(g: KmRound, float32: Boolean): Array[(Any, Array[Double])] =
+    g.stats.groupBy(_._1).toArray.sortBy(_._1.asInstanceOf[Number].longValue)
+      .map { case (cl, rows) =>
+        (cl, rows.map { case (_, _, n, qsum) =>
+          val c = qsum / (1e6 * n)
+          if (float32) c.toFloat.toDouble else c
+        })
+      }
+
+  /** Lloyd's k-means, each superstep ONE dataflow aggregate: [[kmStats]]
+    * over a [[nearestCell]] projection (d2, first-min over the cl-ascending
+    * codebook = the oracle's (d2, cl) row_number tie-break), collected;
+    * centroids and the fixpoint test (sorted stats equal to the previous
+    * round's, `prev` seeding it) run on the driver. Identical stats give
+    * identical centroids, so the early exit is bit-safe against a
+    * fixed-round oracle chain. Returns (last round, rounds, converged?). */
+  private def lloyd(e: DataFrame, seed: Array[(Any, Array[Double])], prev: Option[KmRound],
+      maxRounds: Int, float32: Boolean): (KmRound, Int, Boolean) = {
+    var cb = seed
+    var last = prev
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds && cb.nonEmpty) {
+      val g = collectRound(kmStats(
+        e.select(nearestCell(cb, cosine = false).as("cl"), col("embedding")), "cl"))
+      converged = last.exists(_.stats.sameElements(g.stats))
+      cb = centroidsOf(g, float32)
+      last = Some(g)
+      rounds += 1
+    }
+    (last.get, rounds, converged)
   }
 
   /** Fixed oracle round count for e12_kmeans_full. The engine loop may
@@ -344,42 +339,24 @@ object Embeddings {
     * contract). */
   val KmFullIters = 3
 
-  /** Lloyd's k-means under a convergence probe: init = per-label means
-    * (the e6/e9 seed), then assign → re-estimate rounds until the
-    * integer-exact statistics reach a fixpoint or `maxIters`.
-    *
-    * Scale shape: the corpus frame is the ONE data-sized artifact
-    * (localCheckpoint — every round cross-joins it against a broadcast
-    * k·d centroid frame, so reuse beats re-deriving the scan + spread);
-    * per-round state is the k·d-row stats frame; the fixpoint probe is
-    * an O(1)-row driver read of a full-outer self-join of two k·d-row
-    * frames. Returns (stats, rounds executed, converged?).
-    */
+  /** Lloyd's k-means from the per-label means (the e6/e9 seed): up to
+    * `maxIters` [[lloyd]] rounds with double centroids. The corpus is the
+    * ONE data-sized artifact (a lazy localCheckpoint, materialized by the
+    * seed aggregate); the driver holds k·d stats and centroids. Returns
+    * (final stats as a local frame with [[kmStats]]' schema, rounds,
+    * converged?). */
   def kmeansConverged(eIn: DataFrame, maxIters: Int): (DataFrame, Int, Boolean) = {
-    // lazy checkpoints (round 17): the first round's mismatch probe is
-    // the materializing action for e and g; each later round's probe
-    // materializes its own g2 — one action per round instead of two
     val e = eIn.localCheckpoint(eager = false)
-    var g = kmStats(e, "label").localCheckpoint(eager = false)
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val g2 = kmStats(kmAssign(e, kmCentroids(g)), "cl").localCheckpoint(eager = false)
-      val prev = g.select(col("cl"), col("pos"),
-        col("n").as("pn"), col("qsum").as("pq"))
-      val mismatches = g2.join(prev, Seq("cl", "pos"), "full_outer")
-        .agg(count(when(!(col("n") <=> col("pn")) || !(col("qsum") <=> col("pq")), 1))
-          .as("m"))
-        .first().getLong(0)
-      g = g2
-      iters += 1
-      converged = mismatches == 0
-    }
-    (g, iters, converged)
+    val seed = collectRound(kmStats(e, "label"))
+    val (g, iters, converged) =
+      lloyd(e, centroidsOf(seed, float32 = false), Some(seed), maxIters, float32 = false)
+    val rows = g.stats.map { case (cl, pos, n, qsum) => Row(cl, pos, n, qsum) }
+    (e.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), g.schema),
+      iters, converged)
   }
 
   /** One DuckDB Lloyd round (assign against cent${i-1}, re-estimate
-    * g$i, rebuild cent$i) — the oracle twin of [[kmAssign]]+[[kmStats]]. */
+    * g$i, rebuild cent$i) — the oracle twin of one [[lloyd]] round. */
   private def kmIterSql(i: Int): String = {
     val dvv = Portable.sqlDot("e.embedding", "e.embedding")
     val dvc = Portable.sqlDot("e.embedding", "c.ce")
@@ -492,10 +469,10 @@ object Embeddings {
     * small by definition here; a corpus-sized query set belongs in the
     * shuffle-join formulation, not this one.
     *
-    * `queries`: (qid, qe) with qe an embedding array. Returns
+    * `queries`: (qid, qe) with qe a float embedding array. Returns
     * (query_id, neighbor_id, rk, adist2_e6), k rows per query, ranked by
-    * (adist2_e6, neighbor_id) — identical to e10's contract (Ext8Spec
-    * pins adcTopK ≡ e10 on the gate corpus at a forced 2-query batch).
+    * (adist2_e6, neighbor_id), query_id in the caller's qid type — e10's
+    * contract (Ext8Spec pins adcTopK ≡ e10 at a forced 2-query batch).
     *
     * `excludeSelf` controls the e10 self-match convention: when the query
     * set IS the corpus (e10's shape) each vector's zero-distance match
@@ -517,7 +494,8 @@ object Embeddings {
         Window.orderBy("qid")) - 1) / bs).cast("int"))
       .localCheckpoint()
     val nB = q.agg(coalesce(max("bi"), lit(0)).as("m")).head().getInt(0) + 1
-    import e.sparkSession.implicits._
+    val lutSchema = StructType(Seq(queriesIn.schema("qid"),
+      StructField("lut", MapType(StringType, LongType, valueContainsNull = false))))
     val scored = (0 until nB).map { i =>
       // round 16: per-batch LUTs as DRIVER math shipped as one local
       // relation (the trained-arm lutDriver convention) instead of a
@@ -525,10 +503,10 @@ object Embeddings {
       // every invocation ~1 s of driver planning/codegen at sf0.1. The
       // per-batch collect is bounded by the same adcMaxQueryBatch line
       // that already bounds the broadcast the LUT rows ride in.
-      val lut = q.where(col("bi") === i).select(col("qid"), col("qe"))
-        .as[(Long, Array[Float])].collect().toSeq
-        .map { case (qid, qv) => (qid, lutDriver(qv, cb)) }
-        .toDF("qid", "lut")
+      val lutRows = q.where(col("bi") === i).select(col("qid"), col("qe")).collect()
+        .map(r => Row(r.get(0), lutDriver(r.getSeq[Float](1).toArray, cb)))
+      val lut = e.sparkSession.createDataFrame(
+        java.util.Arrays.asList(lutRows: _*), lutSchema)
       val joined = codes.crossJoin(broadcast(lut))
       (if (excludeSelf) joined.where(col("vec_id") =!= col("qid")) else joined)
         .select(col("qid"), col("vec_id"),
@@ -1172,9 +1150,10 @@ object Embeddings {
     // its nearest e6-style centroid, then recompute the per-(cluster,
     // pos) quantized means. k-means over embeddings IS the training loop
     // of IVF/PQ codebooks; this demonstrates the distributed shape of one
-    // step: centroids broadcast (O(k·d)), assignment is per-row math with
-    // no shuffle, the re-estimation is one hash agg whose partial
-    // aggregation bounds the exchange at O(k·d·partitions) rows.
+    // step (one lloyd round): centroids ride in the NearestCodewords
+    // kernel (O(k·d)), assignment is per-row math with no shuffle, the
+    // re-estimation is one hash agg whose partial aggregation bounds the
+    // exchange at O(k·d·partitions) rows.
     //
     // Cross-engine exactness: centroid components are qsum/(1e6·n) —
     // single correctly-rounded division over exact integers; distances
@@ -1209,9 +1188,9 @@ object Embeddings {
     }) {
       (s, dir) => {
         val e = Portable.spread(Tables.embeddings(s, dir), "vec_id")
-        // one assign + re-estimate round over the per-label seed, via
-        // the shared Lloyd blocks (e12 iterates the identical round)
-        val g = kmStats(kmAssign(e, kmCentroids(kmStats(e, "label"))), "cl")
+        // one assign + re-estimate round over the per-label seed (e12
+        // iterates the identical round)
+        val (g, _, _) = kmeansConverged(e, 1)
         g.select(col("cl").as("cluster"), col("pos"), col("n"),
             graft.Q.r6(col("qsum") / (lit(1e6) * col("n"))).as("centroid"))
           .transform(d => graft.Q.sorted(d, "cluster", "pos"))
@@ -1440,11 +1419,11 @@ object Embeddings {
     // the early exit is bit-safe against the fixed-$KmFullIters-round
     // oracle chain at any SF. Ext9Spec pins the fixpoint property.
     //
-    // Scale: per round, one broadcast of k·d centroid doubles, one
-    // corpus pass for assignment (no shuffle), one hash agg whose
-    // map-side partials bound the exchange at O(k·d·partitions) rows;
-    // the probe reads ONE row. The corpus is the single checkpointed
-    // data-sized artifact (the x_pagerank3 lesson).
+    // Scale: per round ONE aggregate — kernel assignment against the k·d
+    // centroid doubles (no shuffle), a hash agg bounded at
+    // O(k·d·partitions) exchange rows, collected; centroids and the
+    // fixpoint test run on the driver. The corpus is the single
+    // checkpointed data-sized artifact (the x_pagerank3 lesson).
     Q("e12_kmeans_full", {
       val iters = (1 to KmFullIters).map(kmIterSql).mkString(",\n")
       s"""WITH x AS (

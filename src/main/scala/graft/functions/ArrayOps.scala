@@ -207,7 +207,8 @@ case class SimHash32(child: Expression)
 
 /** Per-subspace nearest-codeword indices of a float vector against a
   * FIXED codebook — the one codeword-assignment kernel of the engine
-  * (PQ coding and coarse IVF assignment, on both codebook arms).
+  * (PQ coding, coarse IVF assignment on both codebook arms, and every
+  * Lloyd k-means assignment).
   *
   * For each of `subspaces` equal slices it returns the index of the
   * codeword whose same-position slice minimizes squared distance
@@ -227,14 +228,17 @@ case class SimHash32(child: Expression)
   * codewords' (the dotF length-mismatch convention) and, in cosine mode,
   * when every cosine is NULL (greatest() of all-NULL inputs).
   *
-  * The codebook rides as a REFERENCED OBJECT (k·d floats — ≤1 MB at the
+  * The codebook is double-typed (Lloyd centroids); callers widen float32
+  * codebooks, which is exact, so those score as they would in floats.
+  *
+  * The codebook rides as a REFERENCED OBJECT (k·d doubles — 2 MB at the
   * 4096-codeword cap), not as unrolled literal terms: a 448-codeword
   * expression-tree argmin measured a 233 MB task binary and heartbeat
   * RPC timeouts at data/sf10, and the 10-codeword label-arm unrolling
   * spent over a second per e10 invocation in driver planning — the
   * kernel's task cost is one array reference plus a tight k·d loop.
   */
-case class NearestCodewords(child: Expression, codebook: Array[Array[Float]],
+case class NearestCodewords(child: Expression, codebook: Array[Array[Double]],
     subspaces: Int, cosine: Boolean = false, withScore: Boolean = false)
     extends UnaryExpression {
 
@@ -260,7 +264,7 @@ case class NearestCodewords(child: Expression, codebook: Array[Array[Float]],
       val from = (jm % subspaces) * subDim
       var cc = 0.0
       var i = 0
-      while (i < subDim) { val y = c(from + i).toDouble; cc += y * y; i += 1 }
+      while (i < subDim) { val y = c(from + i); cc += y * y; i += 1 }
       if (cosine) math.sqrt(cc) else cc
     }
 
@@ -288,7 +292,7 @@ case class NearestCodewords(child: Expression, codebook: Array[Array[Float]],
         var vc = 0.0
         i = 0
         while (i < sub) {
-          vc += v.getFloat(from + i).toDouble * c(from + i).toDouble; i += 1
+          vc += v.getFloat(from + i).toDouble * c(from + i); i += 1
         }
         val t = term(j * subspaces + m)
         if (!cosine) {
@@ -410,7 +414,7 @@ case class WinnowSelK(child: Expression, w: Int) extends UnaryExpression {
 object ArrayOps {
   def shingles3(toks: Column): Column =
     Interop.column(Shingles3K(Interop.expression(toks)))
-  def nearestCodewords(vec: Column, codebook: Array[Array[Float]],
+  def nearestCodewords(vec: Column, codebook: Array[Array[Double]],
       subspaces: Int, cosine: Boolean = false, withScore: Boolean = false): Column =
     Interop.column(NearestCodewords(Interop.expression(vec), codebook, subspaces,
       cosine, withScore))

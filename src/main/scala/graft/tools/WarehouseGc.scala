@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Warehouse garbage collection (round-15 verdict task 3): persisted
   * artifacts are keyed by corpus FINGERPRINT plus build-constant tags, so
@@ -140,7 +141,7 @@ object WarehouseGc {
               cmd.contains("org.apache.spark") ||
               cmd.contains("sbt-launch") || cmd.contains("xsbt.boot.Boot")
           }
-        } catch { case _: Throwable => false }
+        } catch { case NonFatal(_) => false }
       }
       if (live)
         println("[gc] --scratch refused: a graft JVM is alive (its shuffle " +

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** Round-8 wave: properties of the full PageRank solver
   * (ops/Basket.pagerankConverged) and the adaptive e1 dispatch that the
@@ -141,6 +142,16 @@ class Ext8Spec extends SparkTestBase {
     val single = SparkEntry.queries("e10_adc")(spark, sf)
       .orderBy("query_id", "rk").collect().map(_.toSeq).toSeq
     assert(batched == single)
+    // the caller's qid type survives to query_id: int and string qids
+    // give the same rows with query_id in that type
+    Seq(IntegerType, StringType).foreach { t =>
+      val typed = ext.Embeddings.adcTopK(e, queries.withColumn("qid", col("qid").cast(t)),
+        ext.Similarity.K, batchSize = 2)
+      assert(typed.schema("query_id").dataType == t, s"$t qid: ${typed.schema}")
+      val rows = typed.collect().map(r => r.toSeq.updated(0, r.get(0).toString)).toSeq
+        .sortBy(r => (r(0).toString.toLong, r(2).asInstanceOf[Long]))
+      assert(rows == single.map(r => r.updated(0, r(0).toString)), s"$t qid rows diverge")
+    }
   }
 
   test("e1 adaptive dispatch: banded tier is a subset of the exact tier at gate scale") {

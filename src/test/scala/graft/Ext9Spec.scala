@@ -3,6 +3,8 @@ package graft
 import graft.ext.Embeddings
 import graft.ext.Portable
 import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** e12_kmeans_full solver properties: the convergence probe's early exit
@@ -35,6 +37,59 @@ class Ext9Spec extends SparkTestBase {
         .first().getLong(0)
       assert(mism == 0, s"$mism stat rows changed after convergence")
     }
+  }
+
+  /** Test-only reference for one Lloyd round from the per-label means:
+    * the former cross-join assignment — every vector against every
+    * centroid, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) —
+    * then the (cl, pos, n, qsum) re-estimate, all as DataFrame ops. */
+  private def crossJoinRound(e: DataFrame): DataFrame = {
+    def stats(df: DataFrame, key: String) =
+      df.select(col(key).as("cl"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .select(col("cl"), col("pos").cast("long").as("pos"),
+          round(col("v").cast("double") * 1e6, 0).cast("long").as("qv"))
+        .groupBy("cl", "pos")
+        .agg(count(lit(1)).as("n"), sum(col("qv")).cast("double").as("qsum"))
+    def dot(a: Column, b: Column) =
+      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+        lit(0.0), (acc, v) => acc + v)
+    val cent = stats(e, "label")
+      .select(col("cl"), struct(col("pos"), (col("qsum") / (lit(1e6) * col("n"))).as("c")).as("pc"))
+      .groupBy("cl").agg(transform(array_sort(collect_list(col("pc"))), p => p.getField("c")).as("ce"))
+    val d2 = (dot(col("embedding"), col("embedding")) -
+      lit(2.0) * dot(col("embedding"), col("ce"))) + dot(col("ce"), col("ce"))
+    val asg = e.crossJoin(cent)
+      .withColumn("rn", row_number().over(Window.partitionBy("vec_id").orderBy(d2, col("cl"))))
+      .where(col("rn") === 1)
+    stats(asg, "cl")
+  }
+
+  test("kmeans Lloyd round on the NearestCodewords kernel ≡ the cross-join + row_number assignment") {
+    def cells(df: DataFrame) = df.orderBy("cl", "pos").collect().map(r =>
+      (r.get(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSeq
+    def check(e: DataFrame, what: String) = {
+      val (got, iters, _) = Embeddings.kmeansConverged(e, maxIters = 1)
+      val want = crossJoinRound(e)
+      assert(iters == 1)
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType), s"$what: schema")
+      assert(cells(got) == cells(want), s"$what: Lloyd round diverges from the cross-join form")
+      cells(want)
+    }
+    check(Portable.spread(Tables.embeddings(spark, sf), "vec_id"), "gate corpus")
+
+    // tie-heavy: labels 0 and 1 hold the same two vectors, so their
+    // centroids are identical and every vector nearest to them ties —
+    // the lower cl must win; rows 4 and 5 are duplicate vectors
+    val s = spark
+    import s.implicits._
+    def grid(a: Int, b: Int) = Array.tabulate(Embeddings.Dims)(d => (((d * a + b) % 5) - 2) / 4.0f)
+    val (va, vb, vc, vd) = (grid(7, 1), grid(3, 2), grid(2, 0), grid(4, 3))
+    val ties = Seq((0L, 0, va), (1L, 0, vb), (2L, 1, va), (3L, 1, vb),
+      (4L, 2, vc), (5L, 2, vc), (6L, 2, vd), (7L, 3, vd)).toDF("vec_id", "label", "embedding")
+    val want = check(ties, "tie frame")
+    val cls = want.map(_._1.asInstanceOf[Int]).toSet
+    assert(cls.contains(0) && !cls.contains(1), s"tie frame is vacuous: clusters $cls")
   }
 
   test("kcore solver: converged core has min degree >= K; pruning is monotone; adversarial graphs") {

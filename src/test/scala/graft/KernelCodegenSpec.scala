@@ -163,7 +163,7 @@ class KernelCodegenSpec extends SparkTestBase {
     * `least()`/`greatest()` + first match over the sequential double
     * dots, NULL cosines skipped. The generated projection carries both
     * output shapes, so two kernel instances share one generated class. */
-  private def nearestThreeWays(vecs: Seq[Array[Float]], cb: Array[Array[Float]],
+  private def nearestThreeWays(vecs: Seq[Array[Float]], cb: Array[Array[Double]],
       m: Int, cosine: Boolean) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.InternalRow
@@ -198,18 +198,19 @@ class KernelCodegenSpec extends SparkTestBase {
       val sub = v.length / m
       val per = (0 until m).map { sm =>
         val from = sm * sub
-        def fold(a: Array[Float], b: Array[Float]): Double = {
+        def fold(a: Int => Double, b: Int => Double): Double = {
           var acc = 0.0; var i = 0
-          while (i < sub) { acc += a(from + i).toDouble * b(from + i).toDouble; i += 1 }
+          while (i < sub) { acc += a(from + i) * b(from + i); i += 1 }
           acc
         }
-        val vv = fold(v, v)
+        val x: Int => Double = v(_).toDouble
+        val vv = fold(x, x)
         val scored = cb.indices.flatMap { j =>
-          val c = cb(j)
-          if (!cosine) Some(((vv - 2.0 * fold(v, c)) + fold(c, c), j))
+          val c: Int => Double = cb(j)(_)
+          if (!cosine) Some(((vv - 2.0 * fold(x, c)) + fold(c, c), j))
           else {
             val nv = math.sqrt(vv); val nc = math.sqrt(fold(c, c))
-            if (nv == 0.0 || nc == 0.0) None else Some((fold(v, c) / (nv * nc), j))
+            if (nv == 0.0 || nc == 0.0) None else Some((fold(x, c) / (nv * nc), j))
           }
         }
         scored.reduceLeftOption((a, b) =>
@@ -225,12 +226,13 @@ class KernelCodegenSpec extends SparkTestBase {
     codegen
   }
 
-  /** Codebook fixtures: random codewords plus an exact duplicate of
+  /** Codebook fixtures: random float32 codewords (widened, as every
+    * float codebook reaches the kernel) plus an exact duplicate of
     * codeword `dupOf` at the end (ties must resolve to `dupOf`, the first
     * minimum) and an all-zero codeword at `zero`; vectors are random plus
     * a copy of `dupOf`, a scaled copy of it and the zero vector. */
   private def nearestFixture(k: Int, dupOf: Int, zero: Int, nRandom: Int,
-      seed: Int): (Array[Array[Float]], Seq[Array[Float]]) = {
+      seed: Int): (Array[Array[Double]], Seq[Array[Float]]) = {
     val rnd = new scala.util.Random(seed)
     val dims = 16
     val cb = Array.fill(k)(Array.fill(dims)(rnd.nextFloat() * 2 - 1))
@@ -238,7 +240,7 @@ class KernelCodegenSpec extends SparkTestBase {
     cb(zero) = new Array[Float](dims)
     val vecs = Seq.fill(nRandom)(Array.fill(dims)(rnd.nextFloat() * 2 - 1)) ++
       Seq(cb(dupOf).clone(), cb(dupOf).map(_ * 2), new Array[Float](dims))
-    (cb, vecs)
+    (cb.map(_.map(_.toDouble)), vecs)
   }
 
   test("NearestCodewords: codegen ≡ interpreted ≡ reference folds, first-min tie-break") {
@@ -273,6 +275,32 @@ class KernelCodegenSpec extends SparkTestBase {
         assert(got.flatten.forall(_.head._1 != zero), s"k=$k: NULL cosine cell chosen")
         // zero-norm vector: every cosine is NULL, so the cell is NULL
         assert(got(n + 2).isEmpty, s"k=$k: all-NULL cosines must give NULL")
+    }
+  }
+
+  test("NearestCodewords double codebook: codegen ≡ interpreted ≡ reference folds, not a float cast") {
+    // Lloyd centroids are doubles no float can hold (0.1 steps, 1e-9
+    // offsets): codeword 3 duplicates codeword 1 (a first-extremum tie the
+    // float copy of codeword 1 must resolve to index 1), and the vectors
+    // are float copies of codewords 0–2, random floats and the zero vector
+    val dims = 8
+    val rnd = new scala.util.Random(13)
+    val cb = Array(
+      Array.tabulate(dims)(i => 0.1 * (i + 1)),
+      Array.tabulate(dims)(i => 0.3 + 1e-9 * (i + 1)),
+      Array.tabulate(dims)(i => -0.2 - 1e-9 * i),
+      null,
+      Array.fill(dims)(rnd.nextDouble() * 2 - 1))
+    cb(3) = cb(1).clone()
+    val vecs = cb.toSeq.take(3).map(_.map(_.toFloat)) ++
+      Seq.fill(20)(Array.fill(dims)(rnd.nextFloat() * 2 - 1)) :+ new Array[Float](dims)
+    Seq((1, false), (2, false), (1, true)).foreach { case (m, cosine) =>
+      val got = nearestThreeWays(vecs, cb, m, cosine)
+      assert(got(1).get.forall(_._1 == 1), s"m=$m cosine=$cosine: tie not first-extremum")
+      // the same codebook rounded to float32 must move some score: a
+      // kernel that narrowed its codebook could not pass the checks above
+      val narrowed = nearestThreeWays(vecs, cb.map(_.map(_.toFloat.toDouble)), m, cosine)
+      assert(got != narrowed, s"m=$m cosine=$cosine: float-rounded codebook scores identically")
     }
   }
 

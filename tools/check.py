@@ -2,7 +2,8 @@
 """Local oracle checker — my feedback loop before the driver's t2 gate.
 
 Usage: python3 tools/check.py [sfdir] [outdir] [--run] [query ...]
-  --run: invoke `sbt runMain graft.Verify` first to refresh outdir.
+  --run: invoke `sbt runMain graft.Verify` first to refresh outdir (only the
+  named queries, when any are given; the oracle SQL of all is written).
 
 For each query in outdir/oracle_sql.json: run the SQL in DuckDB (tables =
 parquet basenames in sfdir), read the Spark parquet from outdir, sort columns
@@ -46,8 +47,10 @@ def main():
 
     if run:
         subprocess.run(
-            ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-            cwd="/root/repo", check=True)
+            ["sbt", "-batch",
+             " ".join(["runMain graft.Verify", str(Path(sfdir).resolve()),
+                       str(Path(outdir).resolve()), *sorted(only)])],
+            cwd=Path(__file__).resolve().parent.parent, check=True)
 
     con = duckdb.connect()
     for t in TABLES:
