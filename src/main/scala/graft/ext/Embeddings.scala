@@ -381,13 +381,17 @@ object Embeddings {
     * O(#labels · Dims) floats — the PQ codebook is driver/broadcast
     * state by design (it is what gets trained); the guard keeps an
     * unexpected label explosion from becoming driver state.
+    *
+    * One aggregate (`min_by` ≡ the oracle's `row_number() OVER
+    * (PARTITION BY label ORDER BY vec_id) = 1`, vec_id being unique),
+    * sorted cl-ascending inside its single output partition, so the
+    * collect is one job: no window sort, and no range-bounds sampling
+    * job that a global `orderBy` would add.
     */
   private[graft] def codebook(e: DataFrame): Array[(Any, Array[Float])] = {
-    val cb = e.withColumn("rn",
-        row_number().over(Window.partitionBy("label").orderBy("vec_id")))
-      .where(col("rn") === 1)
-      .select(col("label").as("cl"), col("embedding").as("ce"))
-      .orderBy("cl")
+    val cb = e.groupBy(col("label").as("cl"))
+      .agg(min_by(col("embedding"), col("vec_id")).as("ce"))
+      .coalesce(1).sortWithinPartitions("cl")
       .collect()
       // label keeps its NATIVE type (int32 in the parquet schema) so the
       // id literals (see idAt) reproduce the exact egress schema the
@@ -1289,7 +1293,9 @@ object Embeddings {
         // — charged every invocation ~1 s of driver planning/codegen
         requireAdcBatch(Similarity.NQueries, cb.length, nprobe = 1)
         import s.implicits._
-        val lutPerQ = e.where(col("vec_id") < Similarity.NQueries)
+        // query rows straight from the table (the vec_id filter is
+        // pushed into the parquet scan), not through the spread shuffle
+        val lutPerQ = Tables.embeddings(s, dir).where(col("vec_id") < Similarity.NQueries)
           .select(col("vec_id"), col("embedding"))
           .as[(Long, Array[Float])].collect().toSeq
           .map { case (qid, qv) => (qid, lutDriver(qv, cb)) }

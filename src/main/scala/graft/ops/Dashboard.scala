@@ -39,9 +39,13 @@ object Dashboard {
     // sf0.1 — a third of the query itself; the FS probe is sub-ms and
     // launches nothing). Both tiers answer to the SAME oracle
     // (dashboard_cascade_scan keeps the scan arm gate-checked at every
-    // SF), so the dispatch cannot change semantics, only the plan.
+    // SF), so the dispatch cannot change semantics, only the plan. Both
+    // read `events` once: the window tier takes the per-symbol globals
+    // from unbounded windows over its one exchange, the scan tier folds
+    // them into its first pass (see [[DashboardScan]]).
     // Measured crossover: the scan wins from sf0.1 up (1.6 s vs 2.4 s;
-    // sf10 13.2 s vs 61.6 s).
+    // sf10 13.2 s vs 61.6 s, measured when the scan still re-read
+    // `events` for the globals; SCALING.md has the single-read numbers).
     //
     // KNOWN ACCEPTED RISK (r8 advice, documented rather than "fixed"):
     // the scan tier's chunked EMA replay truncates warm-up terms below

@@ -2,9 +2,11 @@ package graft.ops
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** The dashboard cascade as a KEY-COUNT-INDEPENDENT two-phase scan — the
@@ -24,16 +26,22 @@ import scala.collection.mutable.ArrayBuffer
   *      history into n contiguous chunks — parallelism is n, not #symbols.
   *   2. Pass 1 collects each partition's trailing `TailLen` raw rows
   *      (key, close, high, low) — O(n · TailLen) driver bytes, same
-  *      bounded-collect budget as EwmaScan's summaries.
+  *      bounded-collect budget as EwmaScan's summaries — and, for every
+  *      key it holds, that key's (min low, max high, first close, last
+  *      close) over the partition's rows.
   *   3. The driver composes, per partition, the incoming warm-up tail for
   *      its FIRST key (walking earlier partitions while the key matches —
   *      range partitioning guarantees any non-first key starts fresh
   *      inside its partition, so only the boundary key needs history).
+  *      It also folds the per-key summaries in partition order into the
+  *      per-symbol globals (support/resistance/first/last): a key's rows
+  *      are contiguous and chronological across partitions, so that fold
+  *      is the whole-key fold. O(#keys + n) state, broadcast with the
+  *      tails.
   *   4. Pass 2 replays the full indicator state machine per partition:
   *      warm-up rows seed the state (outputs discarded), then every owned
-  *      row emits all 23 cascade columns in one sequential O(1)-state
-  *      step. Per-symbol globals (support/resistance/first/last) come
-  *      from a separate tiny aggregate, broadcast-joined after the scan.
+  *      row emits all cascade columns in one sequential O(1)-state step,
+  *      `range_signal` and `trend` read off the broadcast globals.
   *
   * Exactness: every BOUNDED window (rolling mean/min/max ≤ 20 rows, lags,
   * diffs) is bit-exact — the warm-up tail is longer than any frame and
@@ -46,10 +54,10 @@ import scala.collection.mutable.ArrayBuffer
   * reassociation). `DashboardScanSpec` checks equality against the window
   * cascade at 1e-9 across adversarial partitionings.
   *
-  * Scale: two passes over the data (one shared range exchange — the
-  * shuffle map stage is reused across both jobs), O(n·TailLen) driver
-  * state, no per-symbol serialization anywhere. Growth sf1→sf10 is the
-  * pass cost, flat in key count.
+  * Scale: one read of `events` and two passes over the range-exchanged
+  * rows (the shuffle map stage is reused by both jobs), O(n·TailLen +
+  * #keys) driver state, no per-symbol serialization anywhere. Growth
+  * sf1→sf10 is the pass cost, flat in key count.
   */
 object DashboardScan {
 
@@ -261,14 +269,49 @@ object DashboardScan {
     }
   }
 
-  /** One partition's trailing raw rows (chronological), for boundary
-    * warm-up composition on the driver. */
-  private final case class Tail(
-      firstKey: String, keys: Array[String],
-      cs: Array[Double], hs: Array[Double], ls: Array[Double])
+  /** One flagship global set per symbol: support = min(low), resistance
+    * = max(high), first/last close by datetime. Extrema compare in
+    * Spark's double ordering (NaN largest, -0.0 = 0.0) like the `min`/
+    * `max` aggregates, and the closes skip NULL-datetime rows like
+    * `min_by`/`max_by`. Pass 1 folds each key's rows in order; the driver
+    * folds a key's per-partition summaries in partition order. */
+  private final class Globals(var support: Double, var resistance: Double)
+      extends Serializable {
+    var firstc: java.lang.Double = null
+    var lastc: java.lang.Double = null
+    def add(h: Double, l: Double, c: Double, hasDatetime: Boolean): Unit = {
+      if (compareDoubles(l, support) < 0) support = l
+      if (compareDoubles(h, resistance) > 0) resistance = h
+      if (hasDatetime) { if (firstc == null) firstc = c; lastc = c }
+    }
+    /** Fold in the same key's summary from a LATER partition. */
+    def merge(later: Globals): Unit = {
+      if (compareDoubles(later.support, support) < 0) support = later.support
+      if (compareDoubles(later.resistance, resistance) > 0) resistance = later.resistance
+      if (firstc == null) firstc = later.firstc
+      if (later.lastc != null) lastc = later.lastc
+    }
+    def rangeSignal(c: Double): Int =
+      if (compareDoubles(c, resistance * 0.95) >= 0) -1
+      else if (compareDoubles(c, support * 1.05) <= 0) 1 else 0
+    def trend: String =
+      if (firstc != null && lastc != null &&
+        compareDoubles(lastc.doubleValue, firstc.doubleValue) > 0) "Uptrend"
+      else "Downtrend"
+  }
+
+  /** Pass 1's summary of one non-empty partition: its trailing raw rows
+    * (chronological) for boundary warm-up composition, and the globals
+    * of every key it holds, in row order (so `globals.head` is its first
+    * key). */
+  private final case class Part(
+      keys: Array[String],
+      cs: Array[Double], hs: Array[Double], ls: Array[Double],
+      globals: Array[(String, Globals)])
 
   // input projection indices (see `input` below)
-  private val SYM = 0; private val HIGH = 3; private val LOW = 4; private val CLOSE = 5
+  private val SYM = 0; private val DT = 1
+  private val HIGH = 3; private val LOW = 4; private val CLOSE = 5
 
   private val scanSchema = StructType(Seq(
     StructField("symbol", StringType), StructField("datetime", TimestampType),
@@ -290,19 +333,26 @@ object DashboardScan {
     // rolling/shifted extrema, w13 stochastic) dispatch onto this tier
     // at deep history — their columns are the state the cascade already
     // tracks (or a 14-frame view of the same raw ring), exposed here.
-    // The flagship's withGlobals projection drops them, so
-    // dashboard_cascade's oracle schema is unchanged.
+    // The flagship schema below drops them, so dashboard_cascade's
+    // oracle schema is unchanged.
     StructField("h5", DoubleType), StructField("l5", DoubleType),
     StructField("c20max", DoubleType), StructField("c20min", DoubleType),
     StructField("prev_h5", DoubleType), StructField("prev_l5", DoubleType),
     StructField("stoch_k", DoubleType), StructField("stoch_d", DoubleType)))
 
-  /** The scan WITHOUT the per-symbol-globals join — the tier the
-    * standalone indicator queries (w1-w6, and since round 12 the
+  /** The flagship's 25 columns: the cascade plus the two global-derived
+    * signals, in [[Dashboard.cascade]]'s order. */
+  private val flagshipSchema = StructType(
+    scanSchema.fields.slice(0, 17) ++
+      Seq(StructField("range_signal", IntegerType, nullable = false)) ++
+      scanSchema.fields.slice(17, 23) ++
+      Seq(StructField("trend", StringType, nullable = false)))
+
+  /** The scan without the two global-derived columns, exposing the
+    * replayed extrema/stochastic state instead — the tier the standalone
+    * indicator queries (w1-w6, and since round 12 the
     * extrema/pattern/strategy families w8/w9/w13/g1-g3/t4) dispatch
-    * onto: they project only replayed-state columns, so the extra
-    * globals aggregate pass (support/resistance/trend inputs) would be
-    * a third data pass bought for columns the query drops. */
+    * onto: they project only replayed-state columns. */
   def cascadeScanOnly(spark: SparkSession, dir: String,
       numPartitions: Int = 0): DataFrame =
     cascade(spark, dir, numPartitions, withGlobals = false)
@@ -311,34 +361,38 @@ object DashboardScan {
       withGlobals: Boolean = true): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
-    val scored = Core.scored(spark, dir)
-    val input = scored.select(
+    val input = Core.scored(spark, dir).select(
       col("symbol"), col("datetime"), col("open"), col("high"), col("low"),
       col("close"), col("volume"), col("indicator"))
     val sorted = input.repartitionByRange(n, col("symbol"), col("datetime"))
       .sortWithinPartitions("symbol", "datetime")
     val rdd = sorted.rdd // shared lineage: the range-shuffle map stage runs once
 
-    // pass 1: per-partition trailing TailLen raw rows
-    val tails: Map[Int, Tail] = rdd.mapPartitionsWithIndex { (pid, it) =>
+    // pass 1: per-partition trailing TailLen raw rows + per-key globals
+    val parts: Map[Int, Part] = rdd.mapPartitionsWithIndex { (pid, it) =>
       val keys = new Array[String](TailLen)
       val cs = new Array[Double](TailLen)
       val hs = new Array[Double](TailLen)
       val ls = new Array[Double](TailLen)
-      var pos = 0; var size = 0; var firstKey: String = null
+      val globals = new ArrayBuffer[(String, Globals)]
+      var pos = 0; var size = 0
+      var g: Globals = null
       it.foreach { r =>
         val k = r.getString(SYM)
-        if (firstKey == null) firstKey = k
-        keys(pos) = k; cs(pos) = r.getDouble(CLOSE)
-        hs(pos) = r.getDouble(HIGH); ls(pos) = r.getDouble(LOW)
+        val c = r.getDouble(CLOSE); val h = r.getDouble(HIGH); val l = r.getDouble(LOW)
+        if (globals.isEmpty || globals.last._1 != k) {
+          g = new Globals(l, h); globals += (k -> g)
+        }
+        g.add(h, l, c, !r.isNullAt(DT))
+        keys(pos) = k; cs(pos) = c; hs(pos) = h; ls(pos) = l
         pos = (pos + 1) % TailLen; if (size < TailLen) size += 1
       }
-      if (firstKey == null) Iterator.empty
+      if (globals.isEmpty) Iterator.empty
       else { // unroll the ring chronologically
         val ord = (0 until size).map(k => (pos - size + k + 2 * TailLen) % TailLen)
-        Iterator((pid, Tail(firstKey,
+        Iterator((pid, Part(
           ord.map(keys).toArray, ord.map(cs).toArray,
-          ord.map(hs).toArray, ord.map(ls).toArray)))
+          ord.map(hs).toArray, ord.map(ls).toArray, globals.toArray)))
       }
     }.collect().toMap
 
@@ -347,14 +401,14 @@ object DashboardScan {
     // partitions, so walk back while the trailing rows still carry it.
     val incoming: Array[Array[(Double, Double, Double)]] =
       Array.tabulate(n) { p =>
-        tails.get(p).map(_.firstKey) match {
+        parts.get(p).map(_.globals.head._1) match {
           case None => Array.empty[(Double, Double, Double)]
           case Some(fk) =>
             val acc = new ArrayBuffer[(Double, Double, Double)]
             var q = p - 1
             var continue = true
             while (continue && q >= 0 && acc.length < TailLen) {
-              tails.get(q) match {
+              parts.get(q) match {
                 case None => // empty partition: keep walking
                 case Some(t) =>
                   var i = t.keys.length - 1
@@ -373,51 +427,47 @@ object DashboardScan {
             acc.takeRight(TailLen).toArray
         }
       }
-    val bcIn: Broadcast[Array[Array[(Double, Double, Double)]]] =
-      spark.sparkContext.broadcast(incoming)
+    // per-symbol globals: a key's rows are contiguous and in datetime
+    // order across partitions, so folding the summaries in partition
+    // order is the whole-key fold. O(#keys + #partitions) driver state.
+    val globals = mutable.HashMap.empty[String, Globals]
+    for (p <- 0 until n; t <- parts.get(p); (k, g) <- t.globals)
+      globals.get(k) match {
+        case Some(acc) => acc.merge(g)
+        case None => globals(k) = g
+      }
+    val bc: Broadcast[(Array[Array[(Double, Double, Double)]], Map[String, Globals])] =
+      spark.sparkContext.broadcast((incoming, globals.toMap))
 
     // pass 2: sequential replay per partition, warm-up first
     val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
       var curKey: String = null
       var st: CascadeState = null
+      var g: Globals = null
       it.map { r =>
         val k = r.getString(SYM)
         if (k != curKey) {
           st = new CascadeState
           if (curKey == null) // partition's first key: replay the warm-up tail
-            bcIn.value(pid).foreach { case (c, h, l) => st.step(h, l, c, emit = false) }
+            bc.value._1(pid).foreach { case (c, h, l) => st.step(h, l, c, emit = false) }
           curKey = k
+          g = bc.value._2(k)
         }
         val o = st.step(r.getDouble(HIGH), r.getDouble(LOW), r.getDouble(CLOSE), emit = true)
-        Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5),
-          r.get(6), r.get(7),
-          o(0), o(1), o(2), o(3), o(4), o(5), o(6), o(7), o(8), o(9), o(10),
-          o(11), o(12), o(13), o(14), o(15), o(16), o(17), o(18), o(19),
-          o(20), o(21), o(22))
+        if (withGlobals)
+          Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5),
+            r.get(6), r.get(7),
+            o(0), o(1), o(2), o(3), o(4), o(5), o(6), o(7), o(8),
+            g.rangeSignal(r.getDouble(CLOSE)), o(9), o(10),
+            o(11), o(12), o(13), o(14), g.trend)
+        else
+          Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5),
+            r.get(6), r.get(7),
+            o(0), o(1), o(2), o(3), o(4), o(5), o(6), o(7), o(8), o(9), o(10),
+            o(11), o(12), o(13), o(14), o(15), o(16), o(17), o(18), o(19),
+            o(20), o(21), o(22))
       }
     }
-    val scan = spark.createDataFrame(outRdd, scanSchema)
-    if (!withGlobals) return scan
-
-    // per-symbol globals: tiny aggregate, broadcast-joined (datetime is
-    // unique per symbol, so min_by/max_by ≡ the window first/last)
-    val globals = scored.groupBy("symbol").agg(
-      min("low").as("g_support"), max("high").as("g_resistance"),
-      min_by(col("close"), col("datetime")).as("g_firstc"),
-      max_by(col("close"), col("datetime")).as("g_lastc"))
-    scan.join(broadcast(globals), "symbol")
-      .select(col("symbol"), col("datetime"), col("open"), col("high"),
-        col("low"), col("close"), col("volume"), col("indicator"),
-        col("ema5"), col("ema15"), col("sma"), col("rsi"), col("tsi"),
-        col("macd"), col("macd_signal"), col("adx"),
-        col("scalping_signal"),
-        when(col("close") >= col("g_resistance") * 0.95, -1)
-          .when(col("close") <= col("g_support") * 1.05, 1).otherwise(0)
-          .as("range_signal"),
-        col("momentum_signal"), col("breakout_signal"),
-        col("ascending_triangle"), col("descending_triangle"),
-        col("rounding_bottom"), col("color"),
-        when(col("g_lastc") > col("g_firstc"), "Uptrend").otherwise("Downtrend")
-          .as("trend"))
+    spark.createDataFrame(outRdd, if (withGlobals) flagshipSchema else scanSchema)
   }
 }

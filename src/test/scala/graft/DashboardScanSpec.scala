@@ -93,4 +93,105 @@ class DashboardScanSpec extends SparkTestBase {
       f"TailLen=${DashboardScan.TailLen} leaves warm-up error $err%.3e " +
         f"within 100x of the 0.5e-6 rounding threshold")
   }
+
+  /** An events table whose bars pin every flagship global of a key to a
+    * different stretch of its history: AAPL (400 one-event minutes) has
+    * its first close, min low, max high and last close at minutes 0,
+    * 130, 260 and 399, the two closes below almost every other close (a
+    * first or last close read from the wrong partition flips its trend);
+    * GOOGL's max high is a NaN (Spark's double ordering
+    * sorts it largest); MSFT's min low is a -0.0 tied with a later 0.0
+    * close (equal in Spark's ordering). One bar per minute, so each
+    * minute's value is its open/high/low/close — except GOOGL's minute
+    * 5, whose NaN event is followed by a 50.0 (high NaN, low and close
+    * 50.0). */
+  private def globalsFixture(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("dashscan-globals").toString
+    val t0 = java.time.Instant.parse("2024-01-02T00:00:00Z")
+    val ev = new scala.collection.mutable.ArrayBuffer[(Long, java.sql.Timestamp, Long, String, Double, String)]
+    def add(user: Long, minute: Int, sec: Int, v: Double): Unit =
+      ev += ((ev.length.toLong, java.sql.Timestamp.from(t0.plusSeconds(minute * 60L + sec)),
+        user, "tick", v, "{}"))
+    for (i <- 0 until 400)
+      add(0, i, 0, i match {
+        case 0 => 81.0
+        case 130 => 79.0
+        case 260 => 121.0
+        case 399 => 82.0
+        case _ => 100.0 + 20.0 * math.sin(i / 9.0)
+      })
+    for (i <- 0 until 30) {
+      if (i == 5) add(1, i, 0, Double.NaN)
+      add(1, i, 10, if (i == 5) 50.0 else 40.0 + i)
+    }
+    for (i <- 0 until 30)
+      add(2, i, 0,
+        if (i < 10) 10.0 - i else if (i == 10) -0.0 else if (i == 11) 0.0
+        else 3.0 + (29 - i) * 0.1)
+    import spark.implicits._
+    ev.toSeq.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  test("per-symbol globals folded across partitions: range_signal/trend match the window tier") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val dir = globalsFixture()
+    val cols = Seq("symbol", "datetime", "range_signal", "trend")
+    val win = Dashboard.cascadeWindows(spark, dir)
+    val w = rows(win.select(cols.map(col): _*))
+    assert(w.length == 460)
+    // every branch of both signals occurs, so a wrong global shows
+    val sig = w.groupBy(r => (r.getString(0), r.getInt(2))).keySet
+    assert(Seq(-1, 0, 1).forall(v => sig.contains(("AAPL", v))), sig)
+    assert(sig.contains(("GOOGL", 1)) && !sig.contains(("GOOGL", -1)), sig)
+    assert(sig.contains(("MSFT", 1)), sig)
+    assert(w.map(r => (r.getString(0), r.getString(3))).distinct.toSet ==
+      Set(("AAPL", "Uptrend"), ("GOOGL", "Uptrend"), ("MSFT", "Downtrend")))
+    for (n <- Seq(1, 3, 7, 64)) {
+      val scan = DashboardScan.cascade(spark, dir, numPartitions = n)
+      assert(scan.schema.map(f => (f.name, f.dataType)) ==
+        win.schema.map(f => (f.name, f.dataType)), s"n=$n schema")
+      assert(!scan.schema("range_signal").nullable && !scan.schema("trend").nullable)
+      assertSame(w, rows(scan.select(cols.map(col): _*)), s"globals n=$n")
+      if (n >= 7) { // AAPL's four global rows sit in four partitions
+        val at = DashboardScan.cascadeScanOnly(spark, dir, numPartitions = n)
+          .withColumn("pid", spark_partition_id())
+          .where(col("symbol") === "AAPL").orderBy("datetime")
+          .select("pid").collect().map(_.getInt(0))
+        assert(Seq(0, 130, 260, 399).map(at).distinct.length == 4,
+          s"n=$n: fixture rows share a partition")
+      }
+    }
+  }
+
+  test("scan cascade write runs at most 5 Spark jobs (one read of events)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"dashscan-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    def write(): Unit =
+      DashboardScan.cascade(spark, sf).write.format("noop").mode("overwrite").save()
+    write() // warm the path's schema memo: count the query's own jobs only
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "scan cascade job count")
+      write()
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job of the write has been counted
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(jobs.get >= 1 && jobs.get <= 5, s"${jobs.get} jobs")
+  }
 }

@@ -130,6 +130,44 @@ class Ext8Spec extends SparkTestBase {
     assert(cells(flat) == cells(ref), "kernel coding pass diverges from the unrolled form")
   }
 
+  /** The window-form label codebook the `min_by` aggregate replaced
+    * (min-vec_id row per label by `row_number`, cl-ascending by a global
+    * `orderBy`) — kept here as the test-only reference. */
+  private def windowCodebook(e: DataFrame): Array[(Any, Array[Float])] =
+    e.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("label").orderBy("vec_id")))
+      .where(col("rn") === 1)
+      .select(col("label").as("cl"), col("embedding").as("ce"))
+      .orderBy("cl").collect()
+      .map(r => (r.get(0), r.getSeq[Float](1).toArray))
+
+  test("codebook: the min_by aggregate equals the row_number window form") {
+    // ids, cl-ascending order, the native (int32) key type and the raw
+    // float bits of every codeword component (-0.0f included)
+    def cells(cb: Array[(Any, Array[Float])]) = cb.toSeq.map { case (cl, ce) =>
+      (cl, cl.getClass, ce.toSeq.map(java.lang.Float.floatToRawIntBits))
+    }
+    val dims = ext.Embeddings.Dims
+    val gate = ext.Portable.spread(sources.Tables.embeddings(spark, sf), "vec_id")
+    // 40 vectors over 11 labels, arriving vec_id-descending across three
+    // partitions: each label's min-vec_id row is never its first row
+    val mixed = (0 until 40).reverse.map { i =>
+      (i.toLong, (i * 7) % 11,
+        Array.tabulate(dims)(d => if (d == 0 && i % 2 == 1) -0.0f else ((i * 13 + d) % 29 - 14) / 7.0f))
+    }.toDF("vec_id", "label", "embedding").repartition(3)
+    // AQE off: its partition coalescing would fold the tiny aggregate
+    // into one partition anyway and hide an order that holds per
+    // partition only
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try for ((name, e) <- Seq("gate" -> gate, "mixed" -> mixed)) {
+      val agg = ext.Embeddings.codebook(e)
+      assert(agg.length > 1, name)
+      assert(agg.head._1.isInstanceOf[Integer], s"$name: label type ${agg.head._1.getClass}")
+      assert(cells(agg) == cells(windowCodebook(e)), s"$name: codebooks differ")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("adcTopK: broadcast-batched query slices reproduce e10 exactly") {
     // 5 queries at batchSize 2 → 3 batches; query independence means the
     // union of per-batch scoring joins must equal e10's single-broadcast
